@@ -83,17 +83,31 @@ object Bench {
     // record reflects the code, not one bad scheduling window.
     val iterative = Set("gr1_connected_components", "gr2_pagerank",
       "x10_dedup_clusters")
-    val results = selected.map { case (name, fn) =>
+    // A query that throws is a FAILURE, not a time: it is named in
+    // `failed` and kept out of `results`, so an early throw can never
+    // lower the total.
+    val failedB = Vector.newBuilder[String]
+    // mid-run host load: sampled once, when half the queries are done
+    // (a record only — the contamination gate judges load_end_ext)
+    var loadMid = Double.NaN
+    val results = selected.zipWithIndex.flatMap { case ((name, fn), qi) =>
+      if (qi == selected.size / 2) loadMid = loadAvg()
       val runs = if (iterative(name)) 3 else 2
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         releaseCaches()
-        dt
+        if (ok) Some(dt) else None
       }
-      name -> times.min
-    }
+      if (times.contains(None)) { failedB += name; None }
+      else Some(name -> times.flatten.min)
+    }.toMap
+    val failed = failedB.result()
     // %.3f via Locale.ROOT: a comma-decimal default locale would
     // otherwise silently corrupt the JSON line.
     def fmt(v: Double): String =
@@ -127,7 +141,9 @@ object Bench {
                   else if (wall > 0) cpuSec / wall else 0.0
     val loadEndExt = loadEnd - selfPar
     val health =
-      s""""health":{"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},""" +
+      s""""health":{"load_start":${fmt(loadStart)},""" +
+        s""""load_mid":${if (loadMid.isNaN) "null" else fmt(loadMid)},""" +
+        s""""load_end":${fmt(loadEnd)},""" +
         s""""load_end_ext":${fmt(loadEndExt)},""" +
         s""""cpu_sec":${fmt(cpuSec)},"wall_sec":${fmt(wall)}}"""
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -167,7 +183,9 @@ object Bench {
       "st1_stream_tumble", "st9_stream_join_unbounded", "ty3_cogroup")
     val qs = (headline.flatMap(k => results.get(k).map(v => "\"" + k + "\":" + fmt(v)))
       :+ ("\"n_queries\":" + results.size)).mkString("{", ",", "}")
-    val flag = s""""contaminated":$contaminated,"""
+    val failures = s""""n_failed":${failed.size},"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]") + ","
+    val flag = s""""contaminated":$contaminated,$failures"""
     val json =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,$flag$health,"sf":"$sfDir"}"""
     val full = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }

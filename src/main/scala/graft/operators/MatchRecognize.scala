@@ -59,7 +59,7 @@ import org.apache.spark.sql.functions.{col, expr, round}
   * MATCH_NUMBER(), and bare `VAR.column` (≡ LAST, the SQL final
   * semantics for ONE ROW PER MATCH). Spark-side the measures do
   * NOT run inside the NFA: the scan emits one row per bound event
-  * ([[PatternNFA.runPredicatesBindings]]), joins back to the event
+  * ([[PatternNFA.Bindings]]), joins back to the event
   * table on (key, id), and the measures become a plain distributed
   * groupBy((key, match)).agg(...) — FIRST/LAST via min_by/max_by over
   * the sequence position with a per-variable FILTER clause, all
@@ -73,7 +73,7 @@ import org.apache.spark.sql.functions.{col, expr, round}
   * extension one step beyond the reference.
   *
   * DEFINE bodies are ARBITRARY boolean SQL expressions over the event
-  * row (compiled with `expr()` onto [[PatternNFA.runPredicates]]'s
+  * row (compiled with `expr()` onto [[PatternNFA.Pattern]]'s
   * bitmask pre-evaluation), matching the reference's per-variable
   * predicate compilation (flink-table-planner-blink/.../codegen/
   * MatchCodeGenerator.scala, flink-cep/.../pattern/Pattern.java:155
@@ -307,6 +307,11 @@ object MatchRecognize {
     /** A measure/navigation variable's member variables: subset →
       * members, plain variable → itself. */
     def membersOf(v: String): Seq[String] = subsets.getOrElse(v, Seq(v))
+    /** The clause as the engine's pattern: DEFINE bodies as row
+      * predicates, strict row-pattern mode. */
+    def pattern: PatternNFA.Pattern = PatternNFA.Pattern(steps, withinMicros,
+      afterMatch, defines.map { case (n, body) => n -> expr(body) },
+      navCols, ctx, strict = true)
   }
 
   /** Split a DEFINE body on a TOP-LEVEL keyword (paren- and
@@ -735,10 +740,7 @@ object MatchRecognize {
     * the clause's row-per-match mode (see object doc). */
   def run(spark: SparkSession, events: DataFrame, clause: String): DataFrame = {
     val c = compile(clause)
-    val preds = c.defines.map { case (n, body) => n -> expr(body) }
-    if (c.measures.isEmpty)
-      PatternNFA.runPredicates(spark, events, c.steps, preds,
-        c.withinMicros, c.afterMatch, c.navCols, c.ctx, strict = true)
+    if (c.measures.isEmpty) PatternNFA.run(spark, events, c.pattern)
     else {
       // Exploded bindings → equi-join back to the event rows → the
       // measures are one distributed groupBy over (key, match_no).
@@ -755,9 +757,7 @@ object MatchRecognize {
       // so MEASURES like FIRST(A.event_id) keep reading the user's
       // ids. Relying on join-dedup to disambiguate same-name columns
       // is what this replaces.
-      val b = PatternNFA.runPredicatesBindings(spark, events, c.steps,
-          preds, c.withinMicros, c.afterMatch, c.navCols, c.ctx,
-          strict = true)
+      val b = PatternNFA.run(spark, events, c.pattern, PatternNFA.Bindings)
         .withColumnRenamed("key", "_bkey")
         .withColumnRenamed("event_id", "_beid")
       val joined0 = b.join(events,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CEP pattern matching with the full quantifier algebra (SURVEY.md
@@ -138,10 +138,12 @@ import org.apache.spark.sql.functions._
   *    both branches); One-steps stay committed to their earliest
   *    completing candidate (the engine's pinned determinism).
   *
-  * Execution: one shuffle on the key, per-key event-time sort, linear
-  * scan with bounded backtracking — the keyed-state access pattern of
-  * the streaming variant (graft.streaming.StreamingCEP implements the
-  * 2-step case incrementally).
+  * Execution: one engine, two scan loops around one per-anchor decision
+  * ([[offer]]). The batch door ([[run]]) shuffles once on the key,
+  * sorts per key by event time and scans linearly with bounded
+  * backtracking; the streaming door ([[runMature]], driven by
+  * graft.streaming.StreamingMatchRecognize) offers the same anchors
+  * from keyed state as their windows close under the watermark.
   */
 object PatternNFA {
 
@@ -486,14 +488,29 @@ object PatternNFA {
     kindsOf(steps).distinct.map(k => k -> (col("kind") === lit(k)))
   }
 
-  /** events: (key, tsMicros, id, kind) rows. One output row per
-    * emitted match: binding-chain ids and loop counts as deterministic
-    * strings. */
-  def run(spark: SparkSession, events: DataFrame, steps: Seq[Step],
-          withinMicros: Long,
-          afterMatch: AfterMatch = SkipToNextRow): DataFrame =
-    runPredicates(spark, events, steps, kindPreds(steps), withinMicros,
-      afterMatch)
+  /** A pattern as both scan doors take it: the steps, the WITHIN
+    * window and the AFTER MATCH strategy, plus the row predicates the
+    * steps' kinds name. `preds` empty = kind equality, one variable per
+    * kind the steps reference ([[kindPreds]]); otherwise each variable
+    * is an arbitrary boolean Column over the event row (the reference
+    * compiles DEFINE predicates the same way — MatchCodeGenerator.scala),
+    * steps reference variables by `kind` = variable name, max 64.
+    * Predicates are evaluated ONCE per event into a bitmask column
+    * (codegen'd, before the shuffle), so the scan only tests bits.
+    * `navCols` names the event columns the [[NavExpr]] indices of the
+    * CONTEXT predicates `ctx` / iterative-until `untilCtx` resolve to
+    * (see object doc); they ride the scan as typed arrays (NaN/null =
+    * NULL). `strict` is the MATCH_RECOGNIZE contiguous-run mode. */
+  final case class Pattern(steps: Seq[Step], withinMicros: Long,
+                           afterMatch: AfterMatch = SkipToNextRow,
+                           preds: Seq[(String, Column)] = Nil,
+                           navCols: Seq[String] = Nil,
+                           ctx: Map[String, Seq[CtxCmp]] = Map.empty,
+                           untilCtx: Map[String, Seq[CtxCmp]] = Map.empty,
+                           strict: Boolean = false) {
+    def varPreds: Seq[(String, Column)] =
+      if (preds.nonEmpty) preds else kindPreds(steps)
+  }
 
   /** One timed-out partial match: the longest greedily-bound pattern
     * prefix of an anchor whose run could not complete within its
@@ -503,78 +520,166 @@ object PatternNFA {
   final case class PTimeout(key: Long, anchor_id: Long, last_id: Long,
                             chain: String, n_bound: Int)
 
-  /** One live-partial-BRANCH timeout ([[runTimeoutBranches]]):
-    * [[PTimeout]] plus the branch's expiry timestamp — the reference
-    * hands `Tuple2<match, timeoutTimestamp>` to the timeout function,
-    * stamped with the anchor's deadline (anchor.ts + within), not the
-    * watermark that surfaced it. */
+  /** One live-partial-BRANCH timeout: [[PTimeout]] plus the branch's
+    * expiry timestamp — the reference hands `Tuple2<match,
+    * timeoutTimestamp>` to the timeout function, stamped with the
+    * anchor's deadline (anchor.ts + within), not the watermark that
+    * surfaced it. */
   final case class PTimeoutB(key: Long, anchor_id: Long, last_id: Long,
                              chain: String, n_bound: Int, timeout_us: Long)
 
-  /** Timed-out partial matches (flink-cep `PatternStream.java:175`
-    * select(timeoutFunction) / `TimedOutPartialMatchHandler`): every
-    * OFFERED anchor whose run cannot complete within its window emits
-    * the longest greedily-bindable pattern prefix — the NFA state the
-    * reference hands to the timeout function when the within-timer
-    * fires. Batch form = complete-input retrospect of that timer.
-    * Completed runs emit nothing here (they are [[run]]'s output);
-    * the skip mark advances on full matches for EVERY strategy exactly
-    * as in the main scan (the shared [[scanSortedPartition]] drives
-    * both), so this side output sees the same offered anchors the main
-    * output does — the documented symmetry with [[matureTimeouts]]. */
-  def runTimeouts(spark: SparkSession, events: DataFrame, steps: Seq[Step],
-                  withinMicros: Long,
-                  afterMatch: AfterMatch = SkipToNextRow,
-                  bufGauge: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, kindPreds(steps), Nil, Map.empty)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PTimeout](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = true, bufGauge, wantMatches = false)(
-        (_, _, _) => Nil,
-        (_, t, _) => Seq(t))
-    }.toDF()
+  /** What a scan emits — the second argument of both doors. Every
+    * kind rides the same offered anchors and skip marks.
+    *  - [[Matches]]: one [[PMatch]] per match (chain/counts strings).
+    *  - [[Bindings]]: one [[BindingRow]] per (match, variable, bound
+    *    event) — the input shape of the MEASURES clause; group-step
+    *    bindings carry the GROUP's name.
+    *  - [[Timeouts]]: timed-out partial matches (flink-cep
+    *    `PatternStream.java:175` select(timeoutFunction) /
+    *    `TimedOutPartialMatchHandler`): every offered anchor whose run
+    *    cannot complete within its window emits the longest
+    *    greedily-bindable prefix — the NFA state the reference hands to
+    *    the timeout function when the within-timer fires. The skip
+    *    mark advances on full matches exactly as for [[Matches]].
+    *  - [[BranchTimeouts]]: EVERY live partial branch per expiry
+    *    (NFA.advanceTime — NFAITCase
+    *    testSimplePatternWithTimeoutHandling: four timeouts, two per
+    *    anchor, one pair for an anchor that also fully matched), see
+    *    [[branchTimeouts]]. For the pure SKIP_TILL_NEXT family the live
+    *    set is exactly one branch, so [[Timeouts]]' digest already is
+    *    the per-branch answer; this kind exists for the ANY family and
+    *    is NoSkip by construction (skip strategies cull anchors of the
+    *    match stream, not of the timeout stream). */
+  sealed abstract class Emit[O] extends Serializable {
+    private[graft] def encoder: Encoder[O]
+    private[PatternNFA] def onMatch(key: Long, isteps: Seq[INode],
+                                    b: Vector[Vector[Ev]],
+                                    matchNo: Long): Seq[O] = Nil
+    private[PatternNFA] def onTimeout(t: PTimeout, deadline: Long): Seq[O] = Nil
+  }
+  case object Matches extends Emit[PMatch] {
+    private[graft] def encoder: Encoder[PMatch] = Encoders.product[PMatch]
+    override private[PatternNFA] def onMatch(key: Long, isteps: Seq[INode],
+        b: Vector[Vector[Ev]], matchNo: Long): Seq[PMatch] =
+      Seq(emit(key, isteps, b))
+  }
+  case object Bindings extends Emit[BindingRow] {
+    private[graft] def encoder: Encoder[BindingRow] =
+      Encoders.product[BindingRow]
+    override private[PatternNFA] def onMatch(key: Long, isteps: Seq[INode],
+        b: Vector[Vector[Ev]], matchNo: Long): Seq[BindingRow] = {
+      // in strict mode an optional first step may bind nothing — the
+      // anchor is the first BOUND row
+      val anchorId = b.find(_.nonEmpty).get.head.id
+      isteps.zip(b).flatMap { case (st, bound) =>
+        bound.map(e => BindingRow(key, matchNo, anchorId, st.name, e.id, e.idx))
+      }
+    }
+  }
+  case object Timeouts extends Emit[PTimeout] {
+    private[graft] def encoder: Encoder[PTimeout] = Encoders.product[PTimeout]
+    override private[PatternNFA] def onTimeout(t: PTimeout,
+                                               deadline: Long): Seq[PTimeout] =
+      Seq(t)
+  }
+  case object BranchTimeouts extends Emit[PTimeoutB] {
+    private[graft] def encoder: Encoder[PTimeoutB] =
+      Encoders.product[PTimeoutB]
+    override private[PatternNFA] def onTimeout(t: PTimeout,
+                                               deadline: Long): Seq[PTimeoutB] =
+      Seq(PTimeoutB(t.key, t.anchor_id, t.last_id, t.chain, t.n_bound, deadline))
   }
 
-  /** EVERY live partial branch per expiry (flink-cep NFA.advanceTime /
-    * TimedOutPartialMatchHandler — NFAITCase
-    * testSimplePatternWithTimeoutHandling: FOUR timeouts, two per
-    * anchor, one pair for an anchor that ALSO fully matched): a
-    * forward NFA simulation per offered anchor over One / AnyOne /
-    * Next steps. A state waiting on an ANY step STAYS alive across
-    * takes (each take branches); waiting on a relaxed One step it
-    * advances on the first take (no stay — SKIP_TILL_NEXT removes the
-    * waiting state); waiting on a Next step it dies when the adjacent
-    * event does not match. States that bind the final step are full
-    * matches ([[run]]'s output) and emit nothing here; every state
-    * still live when the anchor's window expires emits one row with
-    * `timeout_us` = anchor.ts + within. Contrast [[runTimeouts]]: for
-    * the pure SKIP_TILL_NEXT family the live set is exactly ONE branch
-    * (no stays ever spawn), so the longest-prefix digest there already
-    * IS the reference's per-branch semantics — this door exists for
-    * the ANY family, and is NoSkip by construction (the reference's
-    * timeout contract; skip strategies cull anchors of the MATCH
-    * stream, not the timeout stream). */
-  def runTimeoutBranches(spark: SparkSession, events: DataFrame,
-                         steps: Seq[Step], withinMicros: Long): DataFrame = {
+  /** The batch door: `p` over (key, tsMicros, id, ...) event rows,
+    * emitting `emit`'s rows.
+    *
+    * Execution shape (the 100 TB posture): ONE shuffle on the key, the
+    * per-key (ts, id) sort done BY THE SHUFFLE (sortWithinPartitions —
+    * Tungsten's spillable sort, no per-key in-memory sortBy), then a
+    * single forward pass per partition holding only a WITHIN-bounded
+    * sliding buffer per key — an anchor is offered exactly when its
+    * window is provably complete, so a hot key of any length costs
+    * one window of memory, the same bound as the streaming door's
+    * keyed state. `bufGauge` (tests) accumulates the per-key peak
+    * buffer size. */
+  def run(spark: SparkSession, events: DataFrame, p: Pattern,
+          emit: Emit[_] = Matches,
+          bufGauge: Option[org.apache.spark.util.LongAccumulator] = None)
+      : DataFrame = {
     import spark.implicits._
-    require(steps.length >= 2,
-      "runTimeoutBranches needs at least two steps (a single-step " +
-        "pattern completes on its anchor — nothing can time out)")
-    // branchShape rejects unsupported quantifiers (until-loops,
-    // groups) loudly at compile; r13 extended the door to loop
-    // interiors (the r12 guard was One/AnyOne/Next only)
-    validateBranchShapes(steps)
-    val (isteps, ds) = prepare(events, steps, kindPreds(steps), Nil, Map.empty)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PTimeoutB](it, isteps, withinMicros, NoSkip,
-        collectTimeouts = true, None, wantMatches = false,
-        branchTimeoutMode = true)(
-        (_, _, _) => Nil,
-        (_, t, dl) => Seq(PTimeoutB(t.key, t.anchor_id, t.last_id,
-          t.chain, t.n_bound, dl)))
-    }.toDF()
+    val c = compiled(p, emit)
+    val (navCol, navSCol) =
+      navProjections(p.navCols, navStringFlags(events, p.navCols))
+    val ds = events.select(
+        col("key").cast("long"), col("tsMicros").cast("long"),
+        col("id").cast("long"), satMask(p).as("_sat"),
+        navCol.as("_nav"), navSCol.as("_navS"))
+      .as[(Long, Long, Long, Long, Array[Double], Array[String])]
+      .repartition(col("key"))
+      .sortWithinPartitions(col("key"), col("tsMicros"), col("id"))
+    def scan[O](e: Emit[O]): DataFrame =
+      ds.mapPartitions(it => scanSorted(it, c, e, bufGauge))(e.encoder).toDF()
+    scan(emit)
+  }
+
+  /** The pattern's variable predicates folded into one bitmask column
+    * (bit i = variable i holds) — the same projection for both doors. */
+  private[graft] def satMask(p: Pattern): Column = {
+    val preds = p.varPreds
+    require(preds.size <= 64, "at most 64 pattern variables")
+    preds.zipWithIndex.map { case ((_, pred), i) =>
+      when(pred, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _).cast("long")
+  }
+
+  /** A [[Pattern]] compiled for scanning: steps resolved onto the
+    * variable bits of [[satMask]], context predicates onto step
+    * indices. Built once, before any task runs, by [[compiled]] and shipped to
+    * the tasks of either door. */
+  private[graft] final class Compiled private[PatternNFA] (
+      private[PatternNFA] val isteps: Seq[INode], val withinMicros: Long,
+      val afterMatch: AfterMatch, val strict: Boolean) extends Serializable {
+    private[PatternNFA] val hasCtx = anyCtx(isteps)
+    private[PatternNFA] val loopFirst = hasLoopFirst(isteps)
+    private[PatternNFA] val startMask =
+      if (strict) strictStartMask(isteps) else 0L
+  }
+
+  /** Compile and validate `p` for `emit` — the checks both doors share,
+    * run before any task so a bad pattern fails at construction. */
+  private[graft] def compiled(p: Pattern, emit: Emit[_]): Compiled = {
+    val steps = p.steps
+    // strict mode has no anchor-shape restriction: the attempt row is
+    // the match's first BOUND row, so a quantified/optional first
+    // variable is legal (the reference's PATTERN (A+ C) doc example).
+    // The relaxed doors also accept LOOP-first heads (every loop-kind
+    // event anchors its own run — enumFromAnchor)
+    require(steps.nonEmpty && (p.strict || steps.head.quant == One ||
+        loopFirstShape(steps.head.quant).isDefined ||
+        steps.head.quant.isInstanceOf[GroupTimes]),
+      "first step must be quantifier One (anchor), a loop, or a " +
+        "group (loop/group-first anchoring)")
+    val branches = emit == BranchTimeouts
+    if (branches) {
+      require(steps.length >= 2, "branch timeouts need at least two " +
+        "steps (a single-step pattern completes on its anchor — nothing " +
+        "can time out)")
+      // branchShape rejects until-loops and groups loudly
+      steps.foreach(s => branchShape(s.quant))
+    }
+    val bitOf = p.varPreds.map(_._1).zipWithIndex.toMap
+    val c = new Compiled(
+      compile(steps, k => bitOf.getOrElse(k,
+        sys.error(s"step references undefined pattern variable $k")),
+        p.ctx, p.untilCtx),
+      p.withinMicros, if (branches) NoSkip else p.afterMatch, p.strict)
+    require(!(c.strict && c.afterMatch == NoSkip),
+      "strict row-pattern mode has no NoSkip/followedByAny form " +
+        "(no MATCH_RECOGNIZE clause produces them)")
+    require(c.strict || !(c.loopFirst && (emit == Timeouts || branches)),
+      "timeout side outputs do not support loop-first patterns")
+    if (!c.strict) checkZeroLoopFirst(c.isteps)
+    c
   }
 
   /** (entry relation, interior relation, lo, hi) of a step for the
@@ -602,20 +707,13 @@ object PatternNFA {
     case AnyEntry(inner) =>
       val (_, int, lo, hi) = branchShape(inner); ('A', int, lo, hi)
     case other =>
-      sys.error(s"runTimeoutBranches: unsupported quantifier $other " +
+      sys.error(s"branch timeouts: unsupported quantifier $other " +
         "(until-loops and group patterns have no per-branch timeout " +
-        "door — use runTimeouts' longest-prefix digest)")
+        "form — use the Timeouts longest-prefix digest)")
   }
 
-  /** Driver-side quantifier validation for the branch-timeout doors:
-    * lets operator CONSTRUCTION fail fast on unsupported shapes
-    * (until-loops, groups) instead of surfacing branchShape's
-    * sys.error inside executor tasks on the first micro-batch. */
-  private[graft] def validateBranchShapes(steps: Seq[Step]): Unit =
-    steps.foreach(s => branchShape(s.quant))
-
   /** Live partial branches of anchor `a` at its expiry — the forward
-    * simulation behind [[runTimeoutBranches]], generalized to LOOP
+    * simulation behind [[BranchTimeouts]], generalized to LOOP
     * interiors (r13; the r12 door was One/AnyOne/Next only). The
     * simulation mirrors the reference NFA's computation-state
     * evolution (NFA.java:573-706 computeNextStates +
@@ -651,14 +749,14 @@ object PatternNFA {
     val leafs = isteps.map {
       case l: ILeaf => l
       case _: IGroup =>
-        sys.error("group patterns are not supported by runTimeoutBranches")
+        sys.error("group patterns are not supported by branch timeouts")
     }
     val n = leafs.length
     val shapes = leafs.map(l => branchShape(l.quant))
     val zeroOk = leafs.map(l => canBindEmpty(l.quant))
     zeroOk.sliding(2).foreach { w =>
       require(w.size < 2 || !(w(0) && w(1)),
-        "runTimeoutBranches: two consecutive zero-allowed steps are " +
+        "branch timeouts: two consecutive zero-allowed steps are " +
           "not supported (single-level proceed simulation)")
     }
     // step: index of the CURRENT step; perStep(i) = events bound to
@@ -777,107 +875,6 @@ object PatternNFA {
     * (inclusive) the (ts, id) point. */
   private[graft] final case class Mark(ts: Long, id: Long, inclusive: Boolean)
 
-  /** Streaming twin of [[runTimeouts]]'s per-key scan (the shape
-    * [[matchesMature]] is to [[run]]): timed-out partials for MATURE
-    * anchors only — anchor.ts + within <= watermark, when the window
-    * is provably complete — with the skip mark advanced by FULL
-    * matches exactly as the main scan advances it, so the timeout
-    * stream sees the same offered anchors. */
-  private[graft] def matureTimeouts(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false)
-      : (Seq[PTimeout], Option[Mark]) = {
-    val (_, tmos, mark) = matureScan(key, quads, steps, varNames,
-      withinMicros, afterMatch, wmMicros, minStart, ctx,
-      collectTimeouts = true, strict = strict)
-    (tmos, mark)
-  }
-
-  /** General row-pattern matching: each variable in `varPreds` is an
-    * arbitrary boolean Column over the event row (the reference
-    * compiles DEFINE predicates the same way —
-    * flink-table-planner-blink/.../codegen/MatchCodeGenerator.scala).
-    * Predicates are evaluated ONCE per event into a bitmask column
-    * (codegen'd, before the shuffle — the NFA scan then only tests
-    * bits), so predicate cost is map-side and per-event, not
-    * per-(event × backtrack-visit). `steps` reference variables by
-    * `kind` = variable name; max 64 variables.
-    *
-    * `ctx` adds per-variable CONTEXT predicates (see object doc) that
-    * navigate the partial match; `navCols` names the event columns
-    * their [[NavExpr]] column indices resolve to — these ride through
-    * the scan as compact typed arrays (NaN/null = NULL).
-    *
-    * Execution shape (the 100 TB posture): ONE shuffle on the key, the
-    * per-key (ts, id) sort done BY THE SHUFFLE (sortWithinPartitions —
-    * Tungsten's spillable sort, no per-key in-memory sortBy), then a
-    * single forward pass per partition holding only a WITHIN-bounded
-    * sliding buffer per key — an anchor is scanned exactly when its
-    * window is provably complete, so a hot key of any length costs
-    * one window of memory, the same bound as the streaming operator's
-    * keyed state. `bufGauge` (tests) accumulates the per-key peak
-    * buffer size. */
-  def runPredicates(spark: SparkSession, events: DataFrame, steps: Seq[Step],
-                    varPreds: Seq[(String, org.apache.spark.sql.Column)],
-                    withinMicros: Long,
-                    afterMatch: AfterMatch = SkipToNextRow,
-                    navCols: Seq[String] = Nil,
-                    ctx: Map[String, Seq[CtxCmp]] = Map.empty,
-                    bufGauge: Option[org.apache.spark.util.LongAccumulator] = None,
-                    strict: Boolean = false,
-                    untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : DataFrame = {
-    import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, varPreds, navCols, ctx, strict,
-      untilCtx)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PMatch](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = false, bufGauge, strict = strict)(
-        (key, bindings, _) => Seq(emit(key, isteps, bindings)),
-        (_, _, _) => Nil)
-    }.toDF()
-  }
-
-  /** [[runPredicates]] in exploded per-binding form: one [[BindingRow]]
-    * per (match, variable, bound event). Same scan, same determinism;
-    * this is the input shape of the MEASURES clause (the aggregates
-    * run as an ordinary distributed groupBy over it — see
-    * [[MatchRecognize]]). Group-step bindings carry the GROUP's name
-    * for every bound event. */
-  def runPredicatesBindings(spark: SparkSession, events: DataFrame,
-                            steps: Seq[Step],
-                            varPreds: Seq[(String, org.apache.spark.sql.Column)],
-                            withinMicros: Long,
-                            afterMatch: AfterMatch = SkipToNextRow,
-                            navCols: Seq[String] = Nil,
-                            ctx: Map[String, Seq[CtxCmp]] = Map.empty,
-                            bufGauge: Option[org.apache.spark.util.LongAccumulator] = None,
-                            strict: Boolean = false)
-      : DataFrame = {
-    import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, varPreds, navCols, ctx, strict)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[BindingRow](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = false, bufGauge, strict = strict)(
-        (key, bindings, matchNo) => {
-          // in strict mode an optional first step may bind nothing —
-          // the anchor is the first BOUND row
-          val anchorId = bindings.find(_.nonEmpty).get.head.id
-          isteps.zip(bindings).flatMap { case (st, bound) =>
-            bound.map(e =>
-              BindingRow(key, matchNo, anchorId, st.name, e.id, e.idx))
-          }
-        },
-        (_, _, _) => Nil)
-    }.toDF()
-  }
-
-  /** Common front half of the run shapes: validate, resolve steps onto
-    * variable bits, resolve context predicates onto step indices, and
-    * project events down to the NFA's (key, ts, id, bitmask, nav)
-    * dataset with row-local predicates pre-evaluated map-side. */
   /** Which navigation columns are STRING-typed in `events` — those
     * ride the scan in the parallel string array (same index space;
     * their numeric slot holds NaN and vice versa). */
@@ -904,41 +901,6 @@ object PatternNFA {
         if (s) col(c).cast("string") else lit(null).cast("string")
       }: _*)
     (navD, navS)
-  }
-
-  private def prepare(events: DataFrame, steps: Seq[Step],
-                      varPreds: Seq[(String, org.apache.spark.sql.Column)],
-                      navCols: Seq[String], ctx: Map[String, Seq[CtxCmp]],
-                      strict: Boolean = false,
-                      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : (Seq[INode], org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Array[Double], Array[String])]) = {
-    import events.sparkSession.implicits._
-    // strict mode has no anchor-shape restriction: the attempt row is
-    // the match's first BOUND row, so a quantified/optional first
-    // variable is legal (the reference's PATTERN (A+ C) doc example).
-    // r12: the relaxed door also accepts LOOP-first heads (every
-    // loop-kind event anchors its own run — enumFromAnchor)
-    require(steps.nonEmpty && (strict || steps.head.quant == One ||
-        loopFirstShape(steps.head.quant).isDefined ||
-        steps.head.quant.isInstanceOf[GroupTimes]),
-      "first step must be quantifier One (anchor), a loop, or a " +
-        "group (loop/group-first anchoring)")
-    require(varPreds.size <= 64, "at most 64 pattern variables")
-    val bitOf = varPreds.map(_._1).zipWithIndex.toMap
-    val isteps = compile(steps, k => bitOf.getOrElse(k,
-      sys.error(s"step references undefined pattern variable $k")), ctx,
-      untilCtx)
-    val satCol = varPreds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val (navCol, navSCol) =
-      navProjections(navCols, navStringFlags(events, navCols))
-    val ds = events.select(
-        col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
-        navCol.as("_nav"), navSCol.as("_navS"))
-      .as[(Long, Long, Long, Long, Array[Double], Array[String])]
-    (isteps, ds)
   }
 
   /** Compile public steps to internal nodes: bits via `bitFor`, ctx
@@ -1206,19 +1168,6 @@ object PatternNFA {
     case TimesRange(lo, hi, _, c, z) => (math.max(lo, 1), hi, lo == 0 || z, c)
     case TimesOrMore(n, _, c, z) => (n, Int.MaxValue, z, c)
     case other => sys.error(s"not a loop quantifier: $other")
-  }
-
-  /** followedByAny / ANY-loop patterns (Pattern.java followedByAny:
-    * relaxed contiguity WITH any match). r14: the branch set
-    * enumerates under NoSkip only — every committed strategy takes
-    * one match per anchor, the reference's skipToNext discipline
-    * (AfterMatchSkipITCase testSkipToNextWithFollowedByAny). */
-  private def hasAnyOne(isteps: Seq[INode]): Boolean = isteps.exists {
-    case l: ILeaf => l.quant == AnyOne || isAnyLoop(l.quant)
-    case g: IGroup => g.sub.exists {
-      case l: ILeaf => l.quant == AnyOne
-      case _ => false
-    }
   }
 
   private def anyCtx(isteps: Seq[INode]): Boolean = isteps.exists {
@@ -1579,183 +1528,126 @@ object PatternNFA {
   // pinned window-bounded semantics, so `evs` is never indexed there
   // (cand.idx - off < anchorIdx = cand.idx for off >= 1).
 
-  /** Incremental per-key scan for the STREAMING runtime
-    * ([[graft.streaming.StreamingMatchRecognize]]): run the identical
-    * NFA over a state buffer of (tsMicros, id, satMask, nav) quads,
-    * but offer ONLY MATURE anchors — those whose whole window is
-    * final, i.e. anchor.ts + within <= watermark — so every emitted
-    * match is exactly what the batch scan would emit over the complete
-    * input (events with ts <= watermark can no longer arrive).
-    * `minStart` is the skip high-water [[Mark]] carried in state; the
-    * updated mark is returned with the matches. */
-  private[graft] def matchesMature(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false,
-      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : (Seq[PMatch], Option[Mark]) = {
-    val (raw, _, mark) = matureScan(key, quads, steps, varNames, withinMicros,
-      afterMatch, wmMicros, minStart, ctx, collectTimeouts = false,
-      strict = strict, untilCtx = untilCtx)
-    val isteps = compileByName(steps, varNames, ctx, untilCtx)
-    (raw.map { bindings => emit(key, isteps, bindings) }, mark)
-  }
+  /** Can `e` start an attempt? Relaxed doors: the anchor condition;
+    * strict mode: any row the start mask admits (the attempt itself
+    * re-checks context predicates). */
+  private def startable(c: Compiled, e: Ev): Boolean =
+    if (c.strict) (e.sat & c.startMask) != 0 else anchorOk(e, c.isteps)
 
-  /** [[matchesMature]] in raw-binding form for the streaming MEASURES
-    * path: per emitted match, the per-step bound events as (ts, id)
-    * pairs in sequence order. Same maturity/eviction/skip contract. */
-  private[graft] def matureBindingsRaw(
-      quads: Seq[(Long, Long, Long, Array[Double], Array[String])], steps: Seq[Step],
-      varNames: Seq[String], withinMicros: Long, afterMatch: AfterMatch,
-      wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false)
-      : (Seq[Seq[Seq[(Long, Long)]]], Option[Mark]) = {
-    val (raw, _, mark) = matureScan(0L, quads, steps, varNames, withinMicros,
-      afterMatch, wmMicros, minStart, ctx, collectTimeouts = false,
-      strict = strict)
-    (raw.map(_.map(_.map(e => (e.ts, e.id)))), mark)
-  }
-
-  private def compileByName(steps: Seq[Step], varNames: Seq[String],
-                            ctx: Map[String, Seq[CtxCmp]],
-                            untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : Seq[INode] = {
-    val bitOf = varNames.zipWithIndex.toMap
-    compile(steps, bitOf, ctx, untilCtx)
-  }
-
-  /** Streaming twin of [[runTimeoutBranches]] (the shape
-    * [[matureTimeouts]] is to [[runTimeouts]]): per-branch timeouts
-    * for MATURE anchors only — anchor.ts + within <= watermark — each
-    * stamped with the anchor's deadline. Match status never
-    * suppresses and no skip mark applies (NoSkip, the reference's
-    * timeout contract), so no mark threads through. An anchor is
-    * scanned exactly once across invocations: maturity bound ==
-    * eviction bound in the streaming operator. */
-  private[graft] def matureTimeoutBranches(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      wmMicros: Long): Seq[PTimeoutB] = {
-    val isteps = compileByName(steps, varNames, Map.empty)
-    val evs = quads.toVector.sortBy(t => (t._1, t._2))
-      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
-        Ev(ts, id, s, i, nv, ns) }
-    val seq = new VecEvs(evs)
-    val out = Vector.newBuilder[PTimeoutB]
-    evs.foreach { a =>
-      if (anchorOk(a, isteps) && a.ts + withinMicros <= wmMicros) {
-        val deadline = a.ts + withinMicros
-        branchTimeouts(key, seq, isteps, a, deadline).foreach(t =>
-          out += PTimeoutB(t.key, t.anchor_id, t.last_id, t.chain,
-            t.n_bound, deadline))
-      }
+  /** What one offered anchor `a` produces — the single per-anchor
+    * decision both scan loops ([[scanSorted]], [[runMature]]) call:
+    *  - BranchTimeouts: every live partial branch at the anchor's
+    *    expiry; match status never suppresses (the reference expires an
+    *    anchor's stays even when it also fully matched), no skip mark;
+    *  - NoSkip: EVERY completion, enumerated lazily (a matches-
+    *    discarding emit stops at the hasNext probe), else the
+    *    longest-prefix timeout;
+    *  - otherwise the committed scan: ONE match per offered anchor, the
+    *    earliest completion (the reference emits it first; its prune
+    *    then discards the anchor's sibling branches, all sharing the
+    *    start event) — strict runs, loop-first patterns (first
+    *    enumerated completion) or the relaxed earliest-first bind —
+    *    else the longest-prefix timeout.
+    * Rows go to `out`, matches numbered on from `matchNo`. Returns the
+    * last match number and the skip target the AFTER MATCH strategy
+    * sets, as (event, inclusive): later anchors must lie at or after
+    * (inclusive) or strictly after it. Each loop records the target
+    * in its own form — a minimum anchor index (batch) or a [[Mark]]
+    * carried in state (streaming). */
+  private def offer[O](c: Compiled, evs: EvSeq, key: Long, a: Ev,
+                       emit: Emit[O], matchNo: Long)(out: O => Unit)
+      : (Long, Option[(Ev, Boolean)]) = {
+    val deadline = a.ts + c.withinMicros
+    var n = matchNo
+    def matched(b: Vector[Vector[Ev]]): Unit = {
+      n += 1
+      emit.onMatch(key, c.isteps, b, n).foreach(out)
     }
-    out.result()
-  }
-
-  /** ONE mature-anchor scan serving both streaming side outputs —
-    * matches and timed-out partials share the anchor-offering, the
-    * maturity bound, and the skip-mark discipline BY CONSTRUCTION (a
-    * drift between two copies would silently break the documented
-    * same-offered-anchors contract). The prefix search for timeout
-    * partials costs extra matchFrom calls, so it only runs when
-    * `collectTimeouts` is set. */
-  private def matureScan(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]], collectTimeouts: Boolean,
-      strict: Boolean = false,
-      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : (Seq[Vector[Vector[Ev]]], Seq[PTimeout], Option[Mark]) = {
-    val isteps = compileByName(steps, varNames, ctx, untilCtx)
-    val hasCtx = anyCtx(isteps)
-    val startMask = if (strict) strictStartMask(isteps) else 0L
-    val evs = quads.toVector.sortBy(t => (t._1, t._2))
-      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
-        Ev(ts, id, s, i, nv, ns) }
-    // the streaming buffer is already WITHIN-bounded by eviction, so a
-    // plain indexed view suffices here
-    val seq = new VecEvs(evs)
-    val out = Vector.newBuilder[Vector[Vector[Ev]]]
-    val tmos = Vector.newBuilder[PTimeout]
-    var mark = minStart
-    def afterMark(e: Ev): Boolean = mark.forall { m =>
-      if (m.inclusive) e.ts > m.ts || (e.ts == m.ts && e.id >= m.id)
-      else e.ts > m.ts || (e.ts == m.ts && e.id > m.id)
-    }
-    val enumerateAll = afterMatch == NoSkip
-    require(strict || !(hasLoopFirst(isteps) && collectTimeouts),
-      "timeout side outputs do not support loop-first patterns")
-    if (!strict) checkZeroLoopFirst(isteps)
-    // a skip mark only ever advances (the reference prunes by START
-    // id; an earlier pruning id from a later match prunes a subset of
-    // what is already consumed — never re-admits)
-    def advanceTo(t: Ev): Unit = {
-      val nm = Mark(t.ts, t.id, inclusive = true)
-      val keep = mark.exists { m =>
-        m.ts > nm.ts || (m.ts == nm.ts && m.id > nm.id)
-      }
-      if (!keep) mark = Some(nm)
-    }
-    evs.foreach { a =>
-      val startable =
-        if (strict) (a.sat & startMask) != 0 else anchorOk(a, isteps)
-      if (startable && afterMark(a) &&
-          a.ts + withinMicros <= wmMicros) {
-        val deadline = a.ts + withinMicros
-        if (enumerateAll) {
-          require(!strict, "strict row-pattern mode has no NoSkip/" +
-            "followedByAny form")
-          val all = enumFromAnchor(seq, isteps, a, deadline, hasCtx).toVector
-          if (all.nonEmpty) all.foreach(out += _)
-          else if (collectTimeouts)
-            tmos += timeoutPartial(key, seq, isteps, a, deadline, hasCtx)
-        } else {
-          // committed scan: ONE match per offered anchor — the
-          // earliest completion (the reference emits it first and its
-          // prune then discards the anchor's sibling branches, which
-          // all share the start event). Loop-first / ANY-branching
-          // patterns take the first enumerated completion.
-          val res =
-            if (strict)
-              strictFrom(seq, isteps, strictPrev(a), deadline, a.idx,
-                Vector.empty)
-            else if (hasLoopFirst(isteps))
-              enumFromAnchor(seq, isteps, a, deadline, hasCtx).nextOption()
-            else matchFrom(seq, isteps.drop(1), a, deadline, a.idx,
-              Vector(Vector(a)), hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
-          res match {
-          case Some(bindings) =>
-            out += bindings
-            // under SkipToNextRow no mark is needed: a mature anchor is
-            // evicted in the same invocation (maturity bound == eviction
-            // bound), so each is offered exactly once across invocations
-            afterMatch match {
-              case SkipPastLastEvent =>
-                val lastEv = bindings.flatten.maxBy(e => (e.ts, e.id))
-                mark = Some(Mark(lastEv.ts, lastEv.id, inclusive = false))
+    def timedOut(t: PTimeout): Unit = emit.onTimeout(t, deadline).foreach(out)
+    val skipTo = emit match {
+      case BranchTimeouts =>
+        branchTimeouts(key, evs, c.isteps, a, deadline).foreach(timedOut)
+        None
+      case _ if c.afterMatch == NoSkip =>
+        val all = enumFromAnchor(evs, c.isteps, a, deadline, c.hasCtx)
+        if (!all.hasNext) {
+          if (emit == Timeouts)
+            timedOut(timeoutPartial(key, evs, c.isteps, a, deadline, c.hasCtx))
+        } else if (emit != Timeouts) all.foreach(matched)
+        None
+      case _ =>
+        val res =
+          if (c.strict)
+            strictFrom(evs, c.isteps, strictPrev(a), deadline, a.idx,
+              Vector.empty)
+          else if (c.loopFirst)
+            enumFromAnchor(evs, c.isteps, a, deadline, c.hasCtx).nextOption()
+          else matchFrom(evs, c.isteps.drop(1), a, deadline, a.idx,
+            Vector(Vector(a)), c.hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
+        res match {
+          case Some(b) =>
+            matched(b)
+            c.afterMatch match {
+              case SkipPastLastEvent => Some(b.flatten.maxBy(_.idx) -> false)
               case SkipToFirst(v, thr) =>
-                skipTarget(isteps, bindings, v, first = true, a, thr)
-                  .foreach(advanceTo)
+                skipTarget(c.isteps, b, v, first = true, a, thr).map(_ -> true)
               case SkipToLast(v, thr) =>
-                skipTarget(isteps, bindings, v, first = false, a, thr)
-                  .foreach(advanceTo)
-              case _ =>
+                skipTarget(c.isteps, b, v, first = false, a, thr).map(_ -> true)
+              case _ => None
             }
-          case None if collectTimeouts =>
-            if (strict)
-              strictTimeoutPartial(key, seq, isteps, a, deadline)
-                .foreach(tmos += _)
-            else
-              tmos += timeoutPartial(key, seq, isteps, a, deadline, hasCtx)
           case None =>
-          }
+            if (emit == Timeouts) {
+              if (c.strict)
+                strictTimeoutPartial(key, evs, c.isteps, a, deadline)
+                  .foreach(timedOut)
+              else timedOut(timeoutPartial(key, evs, c.isteps, a, deadline,
+                c.hasCtx))
+            }
+            None
+        }
+    }
+    (n, skipTo)
+  }
+
+  /** The streaming door ([[graft.streaming.StreamingMatchRecognize]]):
+    * [[offer]] over one key's state buffer of (tsMicros, id, satMask,
+    * nav, navS) quints, for MATURE anchors only — anchor.ts + within <=
+    * watermark, when the window is final — so every emitted row is
+    * exactly what the batch door emits over the complete input (events
+    * with ts <= watermark can no longer arrive). The buffer is already
+    * WITHIN-bounded by eviction, and maturity bound == eviction bound,
+    * so each anchor is offered exactly once across invocations.
+    * `minStart` is the skip [[Mark]] carried in state; the advanced mark
+    * is returned with the rows. A skip mark only ever advances (the
+    * reference prunes by START id; an earlier pruning id from a later
+    * match prunes a subset of what is already consumed). Match numbers
+    * restart at 1 per invocation. */
+  private[graft] def runMature[O](
+      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
+      c: Compiled, emit: Emit[O], wmMicros: Long, minStart: Option[Mark])
+      : (Seq[O], Option[Mark]) = {
+    val evs = quads.toVector.sortBy(t => (t._1, t._2))
+      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
+        Ev(ts, id, s, i, nv, ns) }
+    val seq = new VecEvs(evs)
+    val out = Vector.newBuilder[O]
+    // at one (ts, id) point an exclusive mark lies past an inclusive one
+    def at(m: Mark) = (m.ts, m.id, if (m.inclusive) 0 else 1)
+    val order = Ordering[(Long, Long, Int)]
+    var mark = minStart
+    var matchNo = 0L
+    evs.foreach { a =>
+      if (a.ts + c.withinMicros <= wmMicros && startable(c, a) &&
+          mark.forall(m => order.gteq((a.ts, a.id, 0), at(m)))) {
+        val (n, skip) = offer(c, seq, key, a, emit, matchNo)(out += _)
+        matchNo = n
+        skip.foreach { case (t, incl) =>
+          val nm = Mark(t.ts, t.id, incl)
+          if (mark.forall(m => order.lt(at(m), at(nm)))) mark = Some(nm)
         }
       }
     }
-    (out.result(), tmos.result(), mark)
+    (out.result(), mark)
   }
 
   /** Resolve the AFTER MATCH SKIP TO FIRST/LAST target event
@@ -1791,18 +1683,8 @@ object PatternNFA {
     }
   }
 
-  /** ONE shuffle on the key with the per-key (ts, id) sort done BY the
-    * shuffle machinery (Tungsten spillable sort) — no per-key in-memory
-    * sortBy anywhere on the batch path. */
-  private def sortedByKey(
-      ds: org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Array[Double], Array[String])])
-      : org.apache.spark.sql.Dataset[(Long, Long, Long, Long, Array[Double], Array[String])] =
-    ds.repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("tsMicros"), col("id"))
-
-  /** The shared batch scan, streaming over a (key, ts, id)-sorted
-    * partition with a WITHIN-bounded sliding buffer per key — the
-    * whole-key materialization the r8 judge flagged is gone:
+  /** The batch scan loop, streaming over a (key, ts, id)-sorted partition
+    * with a WITHIN-bounded sliding buffer per key:
     *
     *  - an anchor is offered (FIFO, deadlines are monotone in anchor
     *    order) exactly when its window is provably complete — the
@@ -1811,35 +1693,19 @@ object PatternNFA {
     *    [anchor.idx, first-event-past-deadline], all buffered.
     *  - events below the oldest pending anchor are evicted as anchors
     *    drain, so the buffer holds at most one `within` of events —
-    *    the same bound as the streaming operator's keyed state
-    *    ([[matchesMature]]'s eviction). A hot key of any length costs
-    *    one window of memory.
-    *  - matches, skip-mark advancement, match numbering, and timeout
-    *    partials all run inside this one loop, so the main and timeout
-    *    outputs see identical offered anchors under EVERY AfterMatch
-    *    strategy by construction.
+    *    the same bound as the streaming door's keyed state
+    *    ([[runMature]]'s eviction). A hot key of any length costs one
+    *    window of memory.
+    *  - the skip target of each [[offer]] becomes `minAnchorIdx`.
     *
-    * `onMatch`/`onTimeout` shape the emitted rows; outputs queue only
-    * until the consumer drains them (the returned iterator is lazy). */
-  private def scanSortedPartition[O](
+    * Outputs queue only until the consumer drains them (the returned
+    * iterator is lazy). */
+  private def scanSorted[O](
       rows: Iterator[(Long, Long, Long, Long, Array[Double], Array[String])],
-      isteps: Seq[INode], withinMicros: Long, afterMatch: AfterMatch,
-      collectTimeouts: Boolean,
-      gauge: Option[org.apache.spark.util.LongAccumulator],
-      wantMatches: Boolean = true, strict: Boolean = false,
-      branchTimeoutMode: Boolean = false)(
-      onMatch: (Long, Vector[Vector[Ev]], Long) => Seq[O],
-      onTimeout: (Long, PTimeout, Long) => Seq[O]): Iterator[O] = new Iterator[O] {
+      c: Compiled, emit: Emit[O],
+      gauge: Option[org.apache.spark.util.LongAccumulator]): Iterator[O] =
+    new Iterator[O] {
 
-    private val hasCtx = anyCtx(isteps)
-    private val enumerateAll = afterMatch == NoSkip
-    require(!(strict && enumerateAll),
-      "strict row-pattern mode has no NoSkip/followedByAny form " +
-        "(no MATCH_RECOGNIZE clause produces them)")
-    require(strict || !(hasLoopFirst(isteps) && collectTimeouts),
-      "timeout side outputs do not support loop-first patterns")
-    if (!strict) checkZeroLoopFirst(isteps)
-    private val startMask = if (strict) strictStartMask(isteps) else 0L
     private val buf = new SlidingEvs
     private val pending = scala.collection.mutable.Queue.empty[Ev]
     private val out = scala.collection.mutable.Queue.empty[O]
@@ -1849,71 +1715,15 @@ object PatternNFA {
     private var minAnchorIdx = 0
     private var matchNo = 0L
 
-    private def scanAnchor(a: Ev): Unit = {
-      if (a.idx < minAnchorIdx) return
-      val deadline = a.ts + withinMicros
-      if (branchTimeoutMode) {
-        // per-branch expiry emission: match status never suppresses
-        // (the reference expires an anchor's stays even when it also
-        // fully matched), and NoSkip means no skip-mark bookkeeping
-        branchTimeouts(curKey, buf, isteps, a, deadline)
-          .foreach(t => out ++= onTimeout(curKey, t, deadline))
-        return
-      }
-      if (enumerateAll) {
-        val all = enumFromAnchor(buf, isteps, a, deadline, hasCtx)
-        if (!all.hasNext) {
-          if (collectTimeouts)
-            out ++= onTimeout(curKey,
-              timeoutPartial(curKey, buf, isteps, a, deadline, hasCtx),
-              deadline)
-        } else if (wantMatches) all.foreach { bindings =>
-          // lazy: completions stream straight into the output queue —
-          // never materialized; a matches-discarding caller
-          // (runTimeouts) stops at the hasNext probe above
-          matchNo += 1
-          out ++= onMatch(curKey, bindings, matchNo)
-        }
-      } else {
-        // committed scan: ONE match per offered anchor — the earliest
-        // completion (the reference emits it first; its prune then
-        // discards the anchor's sibling branches, all sharing the
-        // start event). Loop-first patterns take the first enumerated
-        // completion.
-        val res =
-          if (strict)
-            strictFrom(buf, isteps, strictPrev(a), deadline, a.idx,
-              Vector.empty)
-          else if (hasLoopFirst(isteps))
-            enumFromAnchor(buf, isteps, a, deadline, hasCtx).nextOption()
-          else matchFrom(buf, isteps.drop(1), a, deadline, a.idx,
-            Vector(Vector(a)), hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
-        res match {
-          case Some(bindings) =>
-            matchNo += 1
-            out ++= onMatch(curKey, bindings, matchNo)
-            afterMatch match {
-              case SkipPastLastEvent =>
-                minAnchorIdx = bindings.flatten.map(_.idx).max + 1
-              case SkipToFirst(v, thr) =>
-                skipTarget(isteps, bindings, v, first = true, a, thr)
-                  .foreach(t => minAnchorIdx = math.max(minAnchorIdx, t.idx))
-              case SkipToLast(v, thr) =>
-                skipTarget(isteps, bindings, v, first = false, a, thr)
-                  .foreach(t => minAnchorIdx = math.max(minAnchorIdx, t.idx))
-              case _ =>
-            }
-            // anchors the skip strategy passed over can never scan —
-            // dropping them eagerly is what lets the buffer evict
-            while (pending.nonEmpty && pending.head.idx < minAnchorIdx)
-              pending.dequeue()
-          case None if collectTimeouts =>
-            val tmo =
-              if (strict) strictTimeoutPartial(curKey, buf, isteps, a, deadline)
-              else Some(timeoutPartial(curKey, buf, isteps, a, deadline, hasCtx))
-            tmo.foreach(t => out ++= onTimeout(curKey, t, deadline))
-          case None =>
-        }
+    private def scanAnchor(a: Ev): Unit = if (a.idx >= minAnchorIdx) {
+      val (n, skip) = offer(c, buf, curKey, a, emit, matchNo)(out.enqueue(_))
+      matchNo = n
+      skip.foreach { case (t, incl) =>
+        minAnchorIdx = math.max(minAnchorIdx, if (incl) t.idx else t.idx + 1)
+        // anchors the skip strategy passed over can never scan —
+        // dropping them eagerly is what lets the buffer evict
+        while (pending.nonEmpty && pending.head.idx < minAnchorIdx)
+          pending.dequeue()
       }
     }
 
@@ -1925,9 +1735,9 @@ object PatternNFA {
       * `< uptoTs` is merely one event conservative), evicting behind
       * the oldest still-pending anchor as they drain. The just-appended
       * trigger event (nextIdx - 1) is always retained — its own
-      * anchorOk check hasn't run yet. */
+      * startable check hasn't run yet. */
     private def drainMature(uptoTs: Long): Unit = {
-      while (pending.nonEmpty && pending.head.ts + withinMicros < uptoTs) {
+      while (pending.nonEmpty && pending.head.ts + c.withinMicros < uptoTs) {
         scanAnchor(pending.dequeue())
         buf.evictBelow(
           if (pending.isEmpty) nextIdx - 1 else pending.head.idx)
@@ -1954,12 +1764,8 @@ object PatternNFA {
       nextIdx += 1
       buf.append(e) // append FIRST: NotNext peeks one past the deadline
       drainMature(ts)
-      // a skip strategy that already advanced past e can never offer
-      // it; strict attempts start at any row the start mask admits
-      // (the attempt itself re-checks context predicates)
-      val startable =
-        if (strict) (e.sat & startMask) != 0 else anchorOk(e, isteps)
-      if (startable && e.idx >= minAnchorIdx) pending.enqueue(e)
+      // a skip strategy that already advanced past e can never offer it
+      if (startable(c, e) && e.idx >= minAnchorIdx) pending.enqueue(e)
       else if (pending.isEmpty) buf.evictBelow(nextIdx) // nothing reads e
     }
 

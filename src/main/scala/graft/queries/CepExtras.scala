@@ -91,11 +91,10 @@ object CepExtras extends QueryGroup {
         |FROM ap WHERE NOT EXISTS (SELECT 1 FROM wcp
         |  WHERE wcp.user_id = ap.user_id AND wcp.a_id = ap.a_id)
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("click", "click", Optional),
-          Step("purchase", "purchase")),
-        withinMicros = H2)
+          Step("purchase", "purchase")), H2))
         .orderBy("key", "anchor_id")
     },
 
@@ -114,11 +113,10 @@ object CepExtras extends QueryGroup {
         |  WHERE e.user_id = a.user_id AND e.event_type = 'error'
         |    AND e.ts_us > a.a_us AND e.ts_us < p.ts_us)
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("noerr", "error", Not),
-          Step("purchase", "purchase")),
-        withinMicros = H2)
+          Step("purchase", "purchase")), H2))
         .orderBy("key", "anchor_id")
     },
 
@@ -150,11 +148,10 @@ object CepExtras extends QueryGroup {
         |      AND e.ts_us < least(m.p_us, coalesce(m.err_us, 9223372036854775807))) AS counts
         |FROM m WHERE m.err_us IS NULL OR m.err_us > m.c_us
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("clicks", "click", OneOrMore(untilKind = Some("error"))),
-          Step("purchase", "purchase")),
-        withinMicros = H6)
+          Step("purchase", "purchase")), H6))
         .orderBy("key", "anchor_id")
     },
 
@@ -195,11 +192,10 @@ object CepExtras extends QueryGroup {
         |FROM m
         |WHERE (b3_id IS NOT NULL AND p3_id IS NOT NULL) OR p2_id IS NOT NULL
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("clicks", "click", TimesRange(2, 3)),
-          Step("purchase", "purchase")),
-        withinMicros = H72)
+          Step("purchase", "purchase")), H72))
         .orderBy("key", "anchor_id")
     },
 
@@ -230,11 +226,10 @@ object CepExtras extends QueryGroup {
         |      WHERE a2.user_id = m.user_id AND a2.a_id = m.a_id)
         |  ORDER BY e.ts_us, e.event_id LIMIT 1) p ON true
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("clicks", "click", Times(2, consecutive = true)),
-          Step("purchase", "purchase")),
-        withinMicros = H72)
+          Step("purchase", "purchase")), H72))
         .orderBy("key", "anchor_id")
     },
 
@@ -373,11 +368,9 @@ object CepExtras extends QueryGroup {
         |SELECT user_id AS key, a_id AS anchor_id, p_id AS end_id,
         |  a_id || ',' || p_id AS chain, '' AS counts
         |FROM rec ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
-          Step("purchase", "purchase")),
-        withinMicros = H6,
-        afterMatch = SkipPastLastEvent)
+          Step("purchase", "purchase")), H6, SkipPastLastEvent))
         .orderBy("key", "anchor_id")
     },
 
@@ -559,9 +552,8 @@ object CepExtras extends QueryGroup {
         |    AND e.ts_us > t.a_us AND e.ts_us < t.a_us + $H2
         |  ORDER BY e.ts_us, e.event_id LIMIT 1) c ON true
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.runTimeouts(s, events(s, dir), Seq(
-          Step("A", "signup"), Step("C", "click"), Step("P", "purchase")),
-          withinMicros = H2)
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
+          Step("A", "signup"), Step("C", "click"), Step("P", "purchase")), H2), Timeouts)
         .select(col("key"), col("anchor_id"), col("last_id"), col("n_bound"))
         .orderBy("key", "anchor_id")
     },
@@ -671,12 +663,10 @@ object CepExtras extends QueryGroup {
         |    AND e.event_type = 'click' AND e.ts_us > r.a_us
         |    AND e.ts_us < r.p_us AND e.ts_us < r.a_us + $H72) AS counts
         |FROM rec r ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("B", "click", OneOrMore()),
-          Step("P", "purchase")),
-        withinMicros = H72,
-        afterMatch = SkipToFirst("B"))
+          Step("P", "purchase")), H72, SkipToFirst("B")))
         .orderBy("key", "anchor_id")
     },
 
@@ -757,11 +747,10 @@ object CepExtras extends QueryGroup {
       // MINIMAL extent (the k=1 completion emits first and the
       // prune discards the extension) — the every-extent shape rides
       // NO SKIP: one row per extent k = 1, 2
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("G", "", GroupTimes(
-            Seq(Step("C", "click"), Step("P", "purchase")), 1, 2))),
-        withinMicros = H72, afterMatch = NoSkip)
+            Seq(Step("C", "click"), Step("P", "purchase")), 1, 2))), H72, NoSkip))
         .orderBy("key", "anchor_id", "counts")
     },
 
@@ -798,12 +787,10 @@ object CepExtras extends QueryGroup {
         |SELECT ap.user_id, ap.a_id, ap.p_id, ap.a_id || ',' || ap.p_id, ''
         |FROM ap
         |ORDER BY key, anchor_id, chain""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("C", "click", Optional),
-          Step("P", "purchase")),
-        withinMicros = H2,
-        afterMatch = NoSkip)
+          Step("P", "purchase")), H2, NoSkip))
         .orderBy("key", "anchor_id", "chain")
     },
 
@@ -890,11 +877,10 @@ object CepExtras extends QueryGroup {
         |FROM m
         |WHERE p2_id IS NOT NULL OR (b3_id IS NOT NULL AND p3_id IS NOT NULL)
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("clicks", "click", TimesRange(2, 3, reluctant = true)),
-          Step("purchase", "purchase")),
-        withinMicros = H72)
+          Step("purchase", "purchase")), H72))
         .orderBy("key", "anchor_id")
     },
 
@@ -916,11 +902,10 @@ object CepExtras extends QueryGroup {
         |  WHERE e.user_id = a.user_id AND e.rn = a.a_rn + 1
         |    AND e.event_type = 'error')
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("noerr", "error", NotNext),
-          Step("purchase", "purchase")),
-        withinMicros = H72)
+          Step("purchase", "purchase")), H72))
         .orderBy("key", "anchor_id")
     },
 
@@ -969,10 +954,9 @@ object CepExtras extends QueryGroup {
         |  AND e.event_type = 'purchase'
         |  AND e.ts_us > a.a_us AND e.ts_us < a.a_us + $H2
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
-          Step("P", "purchase", Next)),
-        withinMicros = H2)
+          Step("P", "purchase", Next)), H2))
         .orderBy("key", "anchor_id")
     },
 
@@ -987,10 +971,9 @@ object CepExtras extends QueryGroup {
         |  AND e.event_type = 'purchase'
         |  AND e.ts_us > a.a_us AND e.ts_us < a.a_us + $H6
         |ORDER BY key, anchor_id, chain""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
-          Step("P", "purchase", AnyOne)),
-        withinMicros = H6, afterMatch = NoSkip)
+          Step("P", "purchase", AnyOne)), H6, NoSkip))
         .orderBy("key", "anchor_id", "chain")
     },
 
@@ -1137,12 +1120,10 @@ object CepExtras extends QueryGroup {
         |    AND e.event_type = 'click' AND e.ts_us > r.a_us
         |    AND e.ts_us < r.p_us AND e.ts_us < r.a_us + $H72) AS counts
         |FROM rec r ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("B", "click", OneOrMore()),
-          Step("P", "purchase")),
-        withinMicros = H72,
-        afterMatch = SkipToLast("B"))
+          Step("P", "purchase")), H72, SkipToLast("B")))
         .orderBy("key", "anchor_id")
     },
 
@@ -1564,11 +1545,10 @@ object CepExtras extends QueryGroup {
         |SELECT user_id AS key, a_id AS anchor_id, p_id AS end_id,
         |  a_id || ',' || s_id || ',' || p_id AS chain, 'B:' || n AS counts
         |FROM m ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("B", "click", OneOrMore(consecutive = true)),
-          Step("P", "purchase")),
-        withinMicros = H72)
+          Step("P", "purchase")), H72))
         .orderBy("key", "anchor_id")
     },
 
@@ -1596,11 +1576,10 @@ object CepExtras extends QueryGroup {
         |    AND c.event_type = 'click'
         |    AND c.ts_us > a.a_us AND c.ts_us < a.a_us + $H2)
         |ORDER BY key, anchor_id, n_bound, last_id""".stripMargin) { (s, dir) =>
-      PatternNFA.runTimeoutBranches(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("A", "signup"),
           Step("C", "click", AnyOne),
-          Step("P", "purchase", AnyOne)),
-        withinMicros = H2)
+          Step("P", "purchase", AnyOne)), H2), BranchTimeouts)
         .orderBy("key", "anchor_id", "n_bound", "last_id")
     },
 
@@ -1633,10 +1612,9 @@ object CepExtras extends QueryGroup {
         |SELECT user_id AS key, c1_id AS anchor_id, p_id AS end_id,
         |  c1_id || ',' || c2_id || ',' || p_id AS chain, '' AS counts
         |FROM m ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("C", "click", Times(2, consecutive = true)),
-          Step("P", "purchase")),
-        withinMicros = H72, afterMatch = NoSkip)
+          Step("P", "purchase")), H72, NoSkip))
         .orderBy("key", "anchor_id")
     },
 
@@ -1797,19 +1775,17 @@ object CepExtras extends QueryGroup {
         |    AND e.ts_us < a.a_us + $H6
         |  ORDER BY e.ts_us, e.event_id LIMIT 1) p ON true
         |ORDER BY key, anchor_id""".stripMargin) { (s, dir) =>
-      PatternNFA.run(s,
-        t(s, dir)("events").select(
+      PatternNFA.run(s, t(s, dir)("events").select(
           col("user_id").as("key"),
           unix_micros(date_trunc("hour", col("ts"))).as("tsMicros"),
           col("event_id").as("id"), col("event_type").as("kind")),
-        Seq(Step("signup", "signup"), Step("click", "click"),
-          Step("purchase", "purchase")),
-        withinMicros = H6)
+        Pattern(Seq(Step("signup", "signup"), Step("click", "click"),
+          Step("purchase", "purchase")), H6))
         .orderBy("key", "anchor_id")
     },
 
     // PER-BRANCH timeouts for LOOP interiors (r13 — the r12 VERDICT's
-    // Missing #2: `A B+ C WITHIN …` through runTimeoutBranches). The
+    // Missing #2: `A B+ C WITHIN …` through the BranchTimeouts emit). The
     // live set at an anchor's expiry, derived from the reference
     // NFA's computation-state evolution (NFA.java:573-706 + the
     // NFACompiler ignore/proceed edge table — see the branchTimeouts
@@ -1858,11 +1834,10 @@ object CepExtras extends QueryGroup {
         |  WHERE e.user_id = a.user_id AND e.event_type = 'click'
         |    AND e.ts_us > a.a_us AND e.ts_us < a.a_us + $H6)
         |ORDER BY key, anchor_id, chain""".stripMargin) { (s, dir) =>
-      PatternNFA.runTimeoutBranches(s, events(s, dir), Seq(
+      PatternNFA.run(s, events(s, dir), Pattern(Seq(
           Step("signup", "signup"),
           Step("click", "click", OneOrMore()),
-          Step("purchase", "purchase")),
-        withinMicros = H6)
+          Step("purchase", "purchase")), H6), BranchTimeouts)
         .orderBy("key", "anchor_id", "chain")
     },
 
@@ -1901,20 +1876,17 @@ object CepExtras extends QueryGroup {
         |  f.a_id || ',' || f.first_c AS chain, 'M:' || b.k AS counts
         |FROM f JOIN bound b ON b.user_id = f.user_id AND b.a_id = f.a_id
         |ORDER BY key, anchor_id, counts""".stripMargin) { (s, dir) =>
-      PatternNFA.runPredicates(s,
-        t(s, dir)("events").select(
+      PatternNFA.run(s, t(s, dir)("events").select(
           col("user_id").as("key"), unix_micros(col("ts")).as("tsMicros"),
           col("event_id").as("id"), col("event_type").as("kind"),
           col("value")),
-        Seq(Step("S", "S"), Step("M", "M", OneOrMore())),
-        Seq("S" -> (col("kind") === "signup"),
+        Pattern(Seq(Step("S", "S"), Step("M", "M", OneOrMore())), H6, NoSkip,
+          preds = Seq("S" -> (col("kind") === "signup"),
             "M" -> (col("kind") === "click")),
-        withinMicros = H6,
-        afterMatch = NoSkip,
-        navCols = Seq("value"),
-        untilCtx = Map("M" -> Seq(CtxCmp(">=",
-          NavExpr.VarAgg("SUM", Seq("M"), NavExpr.Cur(0)),
-          NavExpr.Lit(120.0)))))
+          navCols = Seq("value"),
+          untilCtx = Map("M" -> Seq(CtxCmp(">=",
+            NavExpr.VarAgg("SUM", Seq("M"), NavExpr.Cur(0)),
+            NavExpr.Lit(120.0))))))
         .orderBy("key", "anchor_id", "counts")
     })
 }

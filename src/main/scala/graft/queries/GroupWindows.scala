@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryGroup
-import graft.operators.{Dedup, SimpleCEP}
+import graft.operators.{Dedup, PatternNFA}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -419,11 +419,21 @@ object GroupWindows extends QueryGroup {
         |WHERE rn = 1
         |ORDER BY user_id, a_id""".stripMargin) { (s, dir) =>
       val e = t(s, dir)("events")
-      SimpleCEP.followedBy(
-        a = e.filter(col("event_type") === "signup"),
-        b = e.filter(col("event_type") === "purchase"),
-        keyCol = "user_id", timeCol = "ts", idCol = "event_id",
-        withinSeconds = 7200)
+        .filter(col("event_type").isin("signup", "purchase"))
+      val m = PatternNFA.run(s, e.select(col("user_id").as("key"),
+          unix_micros(col("ts")).as("tsMicros"), col("event_id").as("id"),
+          col("event_type").as("kind")),
+        PatternNFA.Pattern(Seq(PatternNFA.Step("A", "signup"),
+          PatternNFA.Step("B", "purchase")), 7200L * 1000000L))
+      // the engine emits event ids; both timestamps join back
+      def side(kind: String, p: String) = e.filter(col("event_type") === kind)
+        .select(col("user_id"), col("event_id").as(s"${p}_id"),
+          col("ts").as(s"${p}_ts"))
+      m.select(col("key").as("user_id"), col("anchor_id").as("a_id"),
+          col("end_id").as("b_id"))
+        .join(side("signup", "a"), Seq("user_id", "a_id"))
+        .join(side("purchase", "b"), Seq("user_id", "b_id"))
+        .select("user_id", "a_id", "a_ts", "b_id", "b_ts")
         .orderBy("user_id", "a_id")
     },
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryGroup, Tables}
 import graft.streaming._
+import graft.operators.PatternNFA
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -641,8 +642,12 @@ object Streaming extends QueryGroup {
         .orderBy("user_id", "event_id")
     },
 
-    // Streaming CEP: signup followedBy purchase within 2h; B-side
-    // maturity = watermark (mirrored in the oracle).
+    // Streaming CEP: signup followedBy purchase within 2h through the
+    // engine's streaming pattern door. A match is emitted when its
+    // anchor's window closes (a.ts + within <= watermark); the oracle's
+    // B-side bound (b.ts <= watermark) keeps the same rows on the
+    // corpus, where no matched signup's window is still open at the
+    // final watermark.
     q("st6_stream_cep",
       """WITH wm AS (SELECT (epoch_ms(max(ts)) - 60000) * 1000 AS wm_us FROM events),
         |a AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
@@ -657,12 +662,15 @@ object Streaming extends QueryGroup {
         |      JOIN wm ON b.ts_us <= wm.wm_us)
         |SELECT user_id, a_id, b_id FROM m WHERE rn = 1
         |ORDER BY user_id, a_id""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val out = StreamingCEP(s, asGEvents(s, dir), aKind = "signup",
-        bKind = "purchase", withinMicros = 7200L * 1000000L,
-        watermarkDelay = "1 minute")
+      // only signups and purchases can bind these relaxed One steps, so
+      // no other event enters keyed state; the watermark follows them
+      val ab = asGEvents(s, dir).toDF().filter(col("kind").isin("signup", "purchase"))
+      val out = StreamingMatchRecognize.pattern(s, ab,
+        Seq(PatternNFA.Step("A", "signup"), PatternNFA.Step("B", "purchase")),
+        withinMicros = 7200L * 1000000L, watermarkDelay = "1 minute")
       StreamRunner.toTable(s, out.toDF(), OutputMode.Append, "st6_out")
-        .select(col("key").as("user_id"), col("aId").as("a_id"), col("bId").as("b_id"))
+        .select(col("key").as("user_id"), col("anchor_id").as("a_id"),
+          col("end_id").as("b_id"))
         .orderBy("user_id", "a_id")
     },
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryGroup
-import graft.operators.SimpleCEP
+import graft.operators.PatternNFA
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -615,11 +615,10 @@ object TpchLike extends QueryGroup {
       val ev = t(s, dir)("events").select(
         col("user_id").as("key"), unix_micros(col("ts")).as("tsMicros"),
         col("event_id").as("id"), col("event_type").as("kind"))
-      run(s, ev, Seq(
+      run(s, ev, Pattern(Seq(
           Step("signup", "signup"),
           Step("clicks", "click", OneOrMore()),
-          Step("purchase", "purchase")),
-        withinMicros = 21600L * 1000000L)
+          Step("purchase", "purchase")), 21600L * 1000000L))
         .orderBy("key", "anchor_id")
     },
 
@@ -651,17 +650,16 @@ object TpchLike extends QueryGroup {
       val ev = t(s, dir)("events").select(
         col("user_id").as("key"), unix_micros(col("ts")).as("tsMicros"),
         col("event_id").as("id"), col("event_type").as("kind"))
-      run(s, ev, Seq(
+      run(s, ev, Pattern(Seq(
           Step("signup", "signup"),
           Step("click", "click", Times(2)),
-          Step("purchase", "purchase")),
-        withinMicros = 86400L * 1000000L)
+          Step("purchase", "purchase")), 86400L * 1000000L))
         .orderBy("key", "anchor_id")
     },
 
     // Three-step CEP chain: signup → first purchase → first error
     // after it, all within 6h of the signup (PATTERN (A B C) with
-    // relaxed contiguity; composition of two followedBy steps).
+    // relaxed contiguity, one three-step engine pattern).
     q("cep2_three_step",
       """WITH ab AS (
         |  SELECT user_id, a_id, a_ts, b_id, b_ts FROM (
@@ -682,26 +680,15 @@ object TpchLike extends QueryGroup {
         |SELECT user_id, a_id, b_id, c_id FROM abc
         |ORDER BY user_id, a_id""".stripMargin) { (s, dir) =>
       val e = t(s, dir)("events")
-      val ab = SimpleCEP.followedBy(
-          a = e.filter(col("event_type") === "signup"),
-          b = e.filter(col("event_type") === "purchase"),
-          keyCol = "user_id", timeCol = "ts", idCol = "event_id",
-          withinSeconds = 21600)
-        .select(col("user_id"), col("a_id"), col("a_ts"), col("b_id"), col("b_ts"))
-      // step 2: first error after the matched purchase, still within
-      // 6h of the signup — dedup per (user, b) with remaining budget.
-      val c = e.filter(col("event_type") === "error")
-        .select(col("user_id").as("_cu"), col("event_id").as("c_id"), col("ts").as("c_ts"))
-      // partition per signup chain (two signups can share a purchase;
-      // per-b partitioning would tie-break the a_id arbitrarily)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id", "a_id").orderBy(col("c_ts").asc, col("c_id").asc)
-      ab.join(c, col("user_id") === col("_cu") &&
-          col("c_ts") > col("b_ts") &&
-          col("c_ts") < col("a_ts") + expr("INTERVAL 6 HOUR"))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select("user_id", "a_id", "b_id", "c_id")
+        .filter(col("event_type").isin("signup", "purchase", "error"))
+        .select(col("user_id").as("key"), unix_micros(col("ts")).as("tsMicros"),
+          col("event_id").as("id"), col("event_type").as("kind"))
+      PatternNFA.run(s, e, PatternNFA.Pattern(Seq(
+          PatternNFA.Step("A", "signup"), PatternNFA.Step("B", "purchase"),
+          PatternNFA.Step("C", "error")), 21600L * 1000000L))
+        .select(col("key").as("user_id"), col("anchor_id").as("a_id"),
+          split(col("chain"), ",")(1).cast("long").as("b_id"),
+          col("end_id").as("c_id"))
         .orderBy("user_id", "a_id")
     })
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{MatchRecognize, PatternNFA}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -57,59 +57,25 @@ object StreamingMatchRecognize {
                           values: Seq[Option[Double]],
                           classifier: String = null)
 
-  /** Per-key fire context: the compiled pattern the scan needs. */
-  private final case class ScanCtx(steps: Seq[PatternNFA.Step],
-                                   varNames: Seq[String],
-                                   withinMicros: Long,
-                                   afterMatch: PatternNFA.AfterMatch,
-                                   ctx: Map[String, Seq[PatternNFA.CtxCmp]])
-
-  /** SHARED state plumbing for the match stream and the timeout side
-    * output — compile, bitmask projection, watermark column, buffer
-    * fold, eviction (== maturity) bound, flush-on-silence timer. The
-    * two outputs differ ONLY in the per-key scan (`fire`), so the
-    * batching-invariance contract (same offered anchors, same
-    * eviction) holds by construction instead of by keeping two copies
-    * in sync. */
-  private def runKeyed[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, events: DataFrame, clause: String,
-      watermarkDelay: String, requireMsg: String)(
-      fire: (ScanCtx, Long, List[(Long, Long, Long, Array[Double], Array[String])], Long,
-             Option[PatternNFA.Mark]) => (Seq[T], Option[PatternNFA.Mark]))
-      : Dataset[T] = {
-    val c = MatchRecognize.compile(clause)
-    require(c.measures.isEmpty, requireMsg)
-    runKeyedSteps(spark, events, c.steps,
-      c.defines.map { case (n, body) => n -> expr(body) },
-      c.withinMicros, c.afterMatch, c.navCols, c.ctx, watermarkDelay)(fire)
-  }
-
-  /** The API-pattern door (the reference's `CEP.pattern(stream, …)` —
-    * PatternStream.java: the CEP library IS stream-first): the same
-    * keyed-state plumbing the clause door compiles onto, but fed the
-    * Pattern-algebra steps directly — the only route to streaming
-    * GROUP patterns and NO SKIP, which have no SQL clause form. */
-  private def runKeyedSteps[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, events: DataFrame, steps: Seq[PatternNFA.Step],
-      preds: Seq[(String, org.apache.spark.sql.Column)], withinMicros: Long,
-      afterMatch: PatternNFA.AfterMatch, navCols: Seq[String],
-      defCtx: Map[String, Seq[PatternNFA.CtxCmp]], watermarkDelay: String)(
-      fire: (ScanCtx, Long, List[(Long, Long, Long, Array[Double], Array[String])], Long,
-             Option[PatternNFA.Mark]) => (Seq[T], Option[PatternNFA.Mark]))
-      : Dataset[T] = {
+  /** SHARED keyed-state plumbing for the match stream and the timeout
+    * side outputs — compile, bitmask projection, watermark column,
+    * buffer fold, eviction (== maturity) bound, flush-on-silence
+    * timer — around the engine's one streaming door
+    * ([[PatternNFA.runMature]]). The outputs differ ONLY in `emit`, so
+    * the batching-invariance contract (same offered anchors, same
+    * eviction) holds by construction. The pattern compiles before the
+    * query starts: a bad pattern fails at construction, not in a task. */
+  private def runKeyed[T](spark: SparkSession, events: DataFrame,
+                          p: PatternNFA.Pattern, emit: PatternNFA.Emit[T],
+                          watermarkDelay: String): Dataset[T] = {
     import spark.implicits._
-    require(preds.size <= 64, "at most 64 pattern variables")
-    val satCol = preds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    // nav projections must mirror PatternNFA.prepare exactly (NaN/null
-    // = NULL; typed slots) — the streaming scan evaluates the same
-    // RCmp trees
-    val (navCol, navSCol) = PatternNFA.navProjections(navCols,
-      PatternNFA.navStringFlags(events, navCols))
-    val ctx = ScanCtx(steps, preds.map(_._1), withinMicros, afterMatch,
-      defCtx)
-    val within = withinMicros
+    implicit val outEnc: Encoder[T] = emit.encoder
+    val c = PatternNFA.compiled(p, emit)
+    val within = p.withinMicros
+    // nav projections mirror the batch door exactly (NaN/null = NULL;
+    // typed slots) — the streaming scan evaluates the same predicates
+    val (navCol, navSCol) = PatternNFA.navProjections(p.navCols,
+      PatternNFA.navStringFlags(events, p.navCols))
 
     // the watermark column must survive the projection — event-time
     // timeout requires the watermark node in the grouped plan
@@ -117,7 +83,7 @@ object StreamingMatchRecognize {
       .withColumn("_et", timestamp_micros(col("tsMicros")))
       .withWatermark("_et", watermarkDelay)
       .select(col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
+        col("id").cast("long"), PatternNFA.satMask(p).as("_sat"),
         navCol.as("_nav"), navSCol.as("_navS"), col("_et"))
       .as[(Long, Long, Long, Long, Array[Double], Array[String], java.sql.Timestamp)]
 
@@ -133,7 +99,8 @@ object StreamingMatchRecognize {
         val wm = state.getCurrentWatermarkMs() * 1000L
         val mark0 = if (cur.hasMark)
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val (emitted, mark) = fire(ctx, key, buffered, wm, mark0)
+        val (emitted, mark) =
+          PatternNFA.runMature(key, buffered, c, emit, wm, mark0)
         // eviction bound == maturity bound: kept events are exactly the
         // not-yet-mature suffix of the buffer
         val kept = buffered.filter { case (ts, _, _, _, _) => ts + within > wm }
@@ -158,44 +125,32 @@ object StreamingMatchRecognize {
     * the batch [[PatternNFA.PMatch]] shape. */
   def apply(spark: SparkSession, events: DataFrame, clause: String,
             watermarkDelay: String = "10 minutes"): Dataset[PatternNFA.PMatch] = {
-    import spark.implicits._
-    runKeyed[PatternNFA.PMatch](spark, events, clause, watermarkDelay,
-      "MEASURES is batch-only (the reference restricts streaming MATCH_RECOGNIZE too)") {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matchesMature(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx, strict = true)
-    }
+    val c = MatchRecognize.compile(clause)
+    require(c.measures.isEmpty,
+      "MEASURES is batch-only (the reference restricts streaming MATCH_RECOGNIZE too)")
+    runKeyed(spark, events, c.pattern, PatternNFA.Matches, watermarkDelay)
   }
 
   /** Streaming CEP via the PATTERN API (the reference's
     * `CEP.pattern(stream, pattern)` — flink-cep PatternStream.java):
-    * steps over kind-equality variables, any [[PatternNFA.AfterMatch]]
-    * strategy including NoSkip, group patterns included — same
-    * maturity/eviction/mark contract as the clause door. */
+    * steps over kind-equality variables (the batch door's
+    * [[PatternNFA.Pattern]] default, until-kinds and group sub-step
+    * kinds included), any [[PatternNFA.AfterMatch]] strategy including
+    * NoSkip, group patterns included — the only route to streaming
+    * GROUP patterns and NO SKIP, which have no SQL clause form.
+    *
+    * Emission point: a match is emitted when its ANCHOR's window
+    * closes, i.e. in the first micro-batch whose watermark reaches
+    * a.ts + within (`a.ts + within <= watermark`) — not when its last
+    * event arrives. A match whose anchor window is still open at the
+    * final watermark is held back. */
   def pattern(spark: SparkSession, events: DataFrame,
               steps: Seq[PatternNFA.Step], withinMicros: Long,
               afterMatch: PatternNFA.AfterMatch = PatternNFA.SkipToNextRow,
               watermarkDelay: String = "10 minutes")
-      : Dataset[PatternNFA.PMatch] = {
-    import spark.implicits._
-    def kindsOf(ss: Seq[PatternNFA.Step]): Seq[String] = ss.flatMap { st =>
-      st.quant match {
-        case g: PatternNFA.GroupTimes =>
-          kindsOf(g.sub) ++ g.untilKind.toSeq
-        case PatternNFA.OneOrMore(Some(uk), _, _) => Seq(st.kind, uk)
-        case PatternNFA.ZeroOrMore(Some(uk), _, _) => Seq(st.kind, uk)
-        case _ => Seq(st.kind)
-      }
-    }
-    val preds = kindsOf(steps).distinct.filter(_.nonEmpty)
-      .map(k => k -> (col("kind") === lit(k)))
-    runKeyedSteps[PatternNFA.PMatch](spark, events, steps, preds,
-      withinMicros, afterMatch, Nil, Map.empty, watermarkDelay) {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matchesMature(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx)
-    }
-  }
+      : Dataset[PatternNFA.PMatch] =
+    runKeyed(spark, events, PatternNFA.Pattern(steps, withinMicros, afterMatch),
+      PatternNFA.Matches, watermarkDelay)
 
   /** Timed-out partial matches on the unbounded stream — the
     * reference's CEP timeout side output (`PatternStream.java:175`
@@ -209,45 +164,25 @@ object StreamingMatchRecognize {
   def timeouts(spark: SparkSession, events: DataFrame, clause: String,
                watermarkDelay: String = "10 minutes")
       : Dataset[PatternNFA.PTimeout] = {
-    import spark.implicits._
-    runKeyed[PatternNFA.PTimeout](spark, events, clause, watermarkDelay,
-      "timeout side output carries bindings, not MEASURES") {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matureTimeouts(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx, strict = true)
-    }
+    val c = MatchRecognize.compile(clause)
+    require(c.measures.isEmpty,
+      "timeout side output carries bindings, not MEASURES")
+    runKeyed(spark, events, c.pattern, PatternNFA.Timeouts, watermarkDelay)
   }
 
-  /** Streaming PER-BRANCH timeout side output (r12; the PATTERN-API
-    * door of [[PatternNFA.runTimeoutBranches]] — flink-cep
-    * NFA.advanceTime hands EVERY live partial branch to
-    * TimedOutPartialMatchHandler at expiry, deadline-stamped, match
-    * status never suppressing). r13: loop interiors supported (the
-    * full branchShape family — until-loops and groups stay loud);
-    * NoSkip by construction, so no skip mark threads through state. */
+  /** Streaming PER-BRANCH timeout side output (the PATTERN-API form of
+    * [[PatternNFA.BranchTimeouts]] — flink-cep NFA.advanceTime hands
+    * EVERY live partial branch to TimedOutPartialMatchHandler at
+    * expiry, deadline-stamped, match status never suppressing). Loop
+    * interiors are supported (the full branchShape family — until-loops
+    * and groups fail at construction); NoSkip by construction, so no
+    * skip mark threads through state. */
   def timeoutBranches(spark: SparkSession, events: DataFrame,
                       steps: Seq[PatternNFA.Step], withinMicros: Long,
                       watermarkDelay: String = "10 minutes")
-      : Dataset[PatternNFA.PTimeoutB] = {
-    import spark.implicits._
-    require(steps.length >= 2,
-      "timeoutBranches needs at least two steps (a single-step " +
-        "pattern completes on its anchor — nothing can time out); " +
-        "mirrors PatternNFA.runTimeoutBranches")
-    // fail fast at construction on unsupported quantifiers
-    // (until-loops, groups) instead of inside executor tasks on the
-    // first micro-batch (r13 advisor); loop-first patterns stay
-    // rejected by the shared scan guards
-    PatternNFA.validateBranchShapes(steps)
-    val preds = steps.map(_.kind).distinct.filter(_.nonEmpty)
-      .map(k => k -> (col("kind") === lit(k)))
-    runKeyedSteps[PatternNFA.PTimeoutB](spark, events, steps, preds,
-      withinMicros, PatternNFA.NoSkip, Nil, Map.empty, watermarkDelay) {
-      (c, key, buffered, wm, mark0) =>
-        (PatternNFA.matureTimeoutBranches(key, buffered, c.steps,
-          c.varNames, c.withinMicros, wm), mark0)
-    }
-  }
+      : Dataset[PatternNFA.PTimeoutB] =
+    runKeyed(spark, events, PatternNFA.Pattern(steps, withinMicros),
+      PatternNFA.BranchTimeouts, watermarkDelay)
 
   /** Streaming MATCH_RECOGNIZE WITH MEASURES (ONE ROW PER MATCH) —
     * the reference's full streaming surface. Measure columns must be
@@ -294,11 +229,8 @@ object StreamingMatchRecognize {
     require(c.measures.nonEmpty, "no MEASURES in clause — use apply()")
     require(!c.allRows, "streaming MATCH_RECOGNIZE is ONE ROW PER MATCH only " +
       "(the reference has the same restriction)")
-    val preds = c.defines.map { case (n, body) => n -> expr(body) }
-    val varNames = preds.map(_._1)
-    val satCol = preds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    val p = c.pattern
+    val compiled = PatternNFA.compiled(p, PatternNFA.Bindings)
     val measures = c.measures
     // measure columns may be EXPRESSIONS of event columns (the batch
     // path's SUM(B.price * B.rate) form) — resolve them with expr();
@@ -318,7 +250,7 @@ object StreamingMatchRecognize {
     }
     val within = c.withinMicros
     val steps = c.steps
-    val afterMatch = c.afterMatch
+    val stepIdx = steps.map(_.name).zipWithIndex.toMap
     // step indices each measure reads its bound events from (pattern
     // variables are unique in this grammar; a SUBSET variable reads
     // its members' bindings merged in sequence order)
@@ -328,10 +260,8 @@ object StreamingMatchRecognize {
         .map(v => v -> c.membersOf(v).map(mv =>
           steps.indexWhere(_.kind == mv)).sorted).toMap
 
-    val navCols = c.navCols
-    val defCtx = c.ctx
-    val (navCol, navSCol) = PatternNFA.navProjections(navCols,
-      PatternNFA.navStringFlags(events, navCols))
+    val (navCol, navSCol) = PatternNFA.navProjections(c.navCols,
+      PatternNFA.navStringFlags(events, c.navCols))
     val withEt =
       if (attachWatermark) events
         .withColumn("_et", timestamp_micros(col("tsMicros")))
@@ -349,7 +279,7 @@ object StreamingMatchRecognize {
       }
     val ds = withEt
       .select(col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
+        col("id").cast("long"), PatternNFA.satMask(p).as("_sat"),
         array(mcols.map(n => expr(n).cast("double")): _*).as("_mv"),
         navCol.as("_nav"), navSCol.as("_navS"), col("_et"))
       .as[(Long, Long, Long, Long, Seq[Option[Double]], Array[Double],
@@ -371,13 +301,24 @@ object StreamingMatchRecognize {
         val wm = state.getCurrentWatermarkMs() * 1000L
         val mark0 = if (cur.hasMark)
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val quads = buffered.map { case (ts, id, sat, _, nav, navS) =>
-          (ts, id, sat, nav, navS) }
+        // the door numbers bound events by their index in the
+        // (ts, id)-sorted buffer: regroup its binding rows per match
+        // into per-step (ts, id) lists
+        val sorted = buffered.toVector.sortBy(t => (t._1, t._2))
+        val (bound, mark) = PatternNFA.runMature(key,
+          sorted.map { case (ts, id, sat, _, nav, navS) => (ts, id, sat, nav, navS) },
+          compiled, PatternNFA.Bindings, wm, mark0)
+        val rawMatches = bound.groupBy(_.match_no).toSeq.sortBy(_._1).map {
+          case (_, rs) =>
+            val per = Array.fill(steps.size)(Vector.newBuilder[(Long, Long)])
+            rs.foreach { r =>
+              val e = sorted(r.pos)
+              per(stepIdx(r.var_name)) += ((e._1, e._2))
+            }
+            per.toSeq.map(_.result())
+        }
         val mvalsOf = buffered.map { case (ts, id, _, mv, _, _) =>
           (ts, id) -> mv }.toMap
-        val (rawMatches, mark) = PatternNFA.matureBindingsRaw(
-          quads, steps, varNames, within, afterMatch, wm, mark0, defCtx,
-          strict = true)
         var seq = cur.matchSeq
         def fold(m: MatchRecognize.Measure,
                  bindings: Seq[Seq[(Long, Long)]]): Option[Double] = {

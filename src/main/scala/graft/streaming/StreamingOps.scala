@@ -20,8 +20,6 @@ case class TopNEmit(key: Long, rank: Int, id: Long, value: Double, emitSeq: Long
 case class AsOfEmit(key: Long, leftId: Long, leftTsMicros: Long,
                     rightId: Long, rightTsMicros: Long, matched: Boolean)
 
-case class CepEmit(key: Long, aId: Long, aTsMicros: Long, bId: Long, bTsMicros: Long)
-
 /** Streaming Top-N (SURVEY.md §2.6 — StreamExecRank's
   * AppendOnlyTopNFunction.java:48 semantics): per-key sorted buffer in
   * keyed state; emits a revised top-n snapshot whenever it changes.
@@ -410,70 +408,6 @@ object StreamingSemiAntiJoin {
           state.update(State(nRights, stillPending))
           if (stillPending.nonEmpty)
             state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        }
-        out.iterator
-    }
-  }
-}
-
-/** Streaming CEP "A followedBy B within T" (SURVEY.md §2.9 —
-  * flink-cep NFA semantics for the relaxed-contiguity two-step
-  * pattern): pending A's wait in keyed state; B's are buffered until
-  * the watermark, then matched in event-time order; each A emits its
-  * earliest B; expired A's are dropped (state bounded by the window).
-  */
-object StreamingCEP {
-  case class State(as: List[(Long, Long)], bs: List[(Long, Long)])
-
-  def apply(spark: SparkSession, events: Dataset[GEvent], aKind: String,
-            bKind: String, withinMicros: Long,
-            watermarkDelay: String = "10 minutes"): Dataset[CepEmit] = {
-    import spark.implicits._
-    val tagged = events.filter(e => e.kind == aKind || e.kind == bKind)
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, Nil))
-        var as = cur.as
-        var bs = cur.bs
-        rows.foreach { e =>
-          if (e.kind == aKind) as = (e.tsMicros, e.id) :: as
-          else bs = (e.tsMicros, e.id) :: bs
-        }
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (matureB, pendingB) = bs.partition(_._1 <= wmMicros)
-        var matchedAs = Set.empty[(Long, Long)]
-        val out = scala.collection.mutable.ListBuffer.empty[CepEmit]
-        matureB.sortBy(b => (b._1, b._2)).foreach { case (bts, bid) =>
-          as.filter { case (ats, _) =>
-            bts > ats && bts < ats + withinMicros
-          }.sortBy(a => (a._1, a._2)).foreach { a =>
-            if (!matchedAs(a)) {
-              matchedAs += a
-              out += CepEmit(key, a._2, a._1, bid, bts)
-            }
-          }
-        }
-        // drop matched A's and A's whose window fully expired
-        val keptA = as.filterNot(matchedAs)
-          .filter { case (ats, _) => ats + withinMicros > wmMicros }
-        if (keptA.isEmpty && pendingB.isEmpty) {
-          // key completed its lifecycle — free the entry rather than
-          // parking an empty record forever (idle-state hygiene).
-          if (state.exists) state.remove()
-        } else {
-          state.update(State(keptA, pendingB))
-          if (pendingB.nonEmpty)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-          else
-            // keptA dies at its window bound: fire then to clean up
-            // even if the key never sees traffic again.
-            state.setTimeoutTimestamp(
-              ((keptA.map(_._1).max + withinMicros) / 1000L + 1)
-                max (state.getCurrentWatermarkMs() + 1))
         }
         out.iterator
     }

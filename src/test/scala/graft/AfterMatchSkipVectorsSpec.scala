@@ -2,7 +2,9 @@ package graft
 
 import graft.operators.PatternNFA
 import graft.operators.PatternNFA._
+import graft.streaming.{GEvent, StreamingMatchRecognize}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** AfterMatchSkipStrategy parity pinned to the REFERENCE'S OWN
@@ -62,16 +64,37 @@ class AfterMatchSkipVectorsSpec extends AnyFunSuite {
       .toDF("key", "tsMicros", "id", "name")
   }
 
-  private def matches(df: DataFrame, steps: Seq[Step],
-                      am: AfterMatch): Set[(String, String)] =
-    PatternNFA.run(spark, df, steps, W, am)
-      .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
+  private def chains(df: DataFrame): Set[(String, String)] =
+    df.collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
+
+  /** The batch door's match set — which the streaming pattern door
+    * must reproduce: the same events fed in two micro-batches, then one
+    * event on another key far past every deadline so every anchor
+    * matures. The two doors meet in the shared anchor offer; this is
+    * where their skip marks (minimum anchor index vs carried Mark)
+    * are held equal. */
+  private def matches(df: DataFrame, steps: Seq[Step],
+                      am: AfterMatch): Set[(String, String)] = {
+    val batch = chains(PatternNFA.run(spark, df, Pattern(steps, W, am)))
+    import spark.implicits._
+    val evs = df.as[(Long, Long, Long, String)].collect()
+      .map { case (k, ts, id, kind) => GEvent(k, ts, id, kind, 0.0) }.toSeq
+    val (b1, b2) = evs.splitAt(evs.size / 2)
+    val flush = GEvent(1L, evs.map(_.tsMicros).max + 10 * W, 0L, "flush", 0.0)
+    val streamed = chains(StreamHarness.run(Seq(b1, b2, Seq(flush)),
+        OutputMode.Append, "amskip_stream") { ds =>
+      StreamingMatchRecognize.pattern(spark, ds.toDF(), steps, W, am,
+        watermarkDelay = "0 seconds").toDF()
+    })
+    assert(streamed == batch, s"streaming door $streamed != batch door $batch")
+    batch
+  }
 
   private def matchesP(df: DataFrame, steps: Seq[Step],
                        preds: Seq[(String, org.apache.spark.sql.Column)],
                        am: AfterMatch): Set[(String, String)] =
-    PatternNFA.runPredicates(spark, df, steps, preds, W, am)
+    PatternNFA.run(spark, df, Pattern(steps, W, am, preds = preds))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
 
@@ -275,11 +298,12 @@ class AfterMatchSkipVectorsSpec extends AnyFunSuite {
       .toDF("key", "tsMicros", "id", "kind", "price")
     val preds = Seq("A" -> (col("kind") === "a"),
       "C" -> (col("kind") === "c"), "B" -> (col("kind") === "b"))
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("A", "A"), Step("C", "C"), Step("B", "B")),
-        preds, W, SkipToFirst("C"), navCols = Seq("price"),
-        ctx = Map("B" -> Seq(CtxCmp("=",
-          NavExpr.VarNav(Seq("A"), 0, first = true, 0), NavExpr.Cur(0)))))
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("A", "A"), Step("C", "C"), Step("B", "B")), W, SkipToFirst("C"),
+          preds = preds,
+          navCols = Seq("price"),
+          ctx = Map("B" -> Seq(CtxCmp("=",
+          NavExpr.VarNav(Seq("A"), 0, first = true, 0), NavExpr.Cur(0))))))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     assert(got == Set(("1,2,6", ""), ("3,4,5", "")), got)

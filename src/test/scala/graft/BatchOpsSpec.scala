@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AsOfJoin, Dedup, SimpleCEP}
+import graft.operators.{AsOfJoin, Dedup, PatternNFA}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,15 +43,33 @@ class BatchOpsSpec extends AnyFunSuite {
     assert(last == Set(3L, 5L, 6L, 7L))
   }
 
-  test("SimpleCEP.followedBy finds earliest B within window") {
-    val got = SimpleCEP.followedBy(
-      a = events.filter(col("event_type") === "signup"),
-      b = events.filter(col("event_type") === "purchase"),
-      keyCol = "user_id", timeCol = "ts", idCol = "event_id",
-      withinSeconds = 60)
-      .select("a_id", "b_id").collect()
+  test("followedBy pattern finds earliest B within window") {
+    val got = PatternNFA.run(spark, events.select(col("user_id").as("key"),
+          unix_micros(col("ts")).as("tsMicros"), col("event_id").as("id"),
+          col("event_type").as("kind")),
+        PatternNFA.Pattern(Seq(PatternNFA.Step("A", "signup"),
+          PatternNFA.Step("B", "purchase")), 60L * 1000000L))
+      .select("anchor_id", "end_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(got == Set(1L -> 2L, 3L -> 4L)) // id5 outside window; user2 B precedes A
+  }
+
+  test("followedBy binds a same-timestamp B with a later id (positional contiguity)") {
+    import spark.implicits._
+    // ties order by id, as in the reference's NFA: the purchase sharing
+    // the signup's timestamp binds when its id is later (2 after 1), not
+    // when it is earlier (3 before 4)
+    val ev = Seq((1L, 100L, 1L, "signup"), (1L, 100L, 2L, "purchase"),
+        (2L, 100L, 3L, "purchase"), (2L, 100L, 4L, "signup"))
+      .toDF("key", "sec", "id", "kind")
+      .select(col("key"), (col("sec") * 1000000L).as("tsMicros"), col("id"),
+        col("kind"))
+    val got = PatternNFA.run(spark, ev,
+        PatternNFA.Pattern(Seq(PatternNFA.Step("A", "signup"),
+          PatternNFA.Step("B", "purchase")), 60L * 1000000L))
+      .select("anchor_id", "end_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    assert(got == Set(1L -> 2L))
   }
 
   test("AsyncLookup.orderedWait keeps input order with bounded in-flight requests") {
@@ -199,9 +217,8 @@ class BatchOpsSpec extends AnyFunSuite {
       (1L, 40L, 4L, "C"), (1L, 50L, 5L, "B"), (1L, 60L, 6L, "C"),
       (2L, 10L, 7L, "B"), (2L, 20L, 8L, "C")) // no anchor → no match
       .toDF("key", "tsMicros", "id", "kind")
-    val got = graft.operators.PatternNFA.run(spark, ev, Seq(
-        Step("a", "A"), Step("bs", "B", OneOrMore()), Step("c", "C")),
-      withinMicros = 100L)
+    val got = graft.operators.PatternNFA.run(spark, ev, Pattern(Seq(
+        Step("a", "A"), Step("bs", "B", OneOrMore()), Step("c", "C")), 100L))
       .collect().map(r => (r.getAs[Long]("key"), r.getAs[String]("chain"),
         r.getAs[String]("counts"))).toSeq
     assert(got == Seq((1L, "1,2,4", "bs:2"))) // B@50 is after C-binding → not counted
@@ -219,7 +236,7 @@ class BatchOpsSpec extends AnyFunSuite {
       (2L, 0L, 3L, "A"), (2L, 99L, 4L, "B"))    // B inside the window
       .toDF("key", "tsMicros", "id", "kind")
     val got = graft.operators.PatternNFA.run(spark, ev,
-        Seq(Step("a", "A"), Step("b", "B")), withinMicros = 100L)
+        Pattern(Seq(Step("a", "A"), Step("b", "B")), 100L))
       .select("key").collect().map(_.getLong(0)).toSeq
     assert(got == Seq(2L)) // exclusive at the boundary, inclusive inside
   }
@@ -229,8 +246,7 @@ class BatchOpsSpec extends AnyFunSuite {
     import spark.implicits._
     def run(ev: Seq[(Long, Long, Long, String)], steps: Seq[Step],
             within: Long = 1000L, am: AfterMatch = SkipToNextRow) =
-      graft.operators.PatternNFA.run(spark,
-          ev.toDF("key", "tsMicros", "id", "kind"), steps, within, am)
+      graft.operators.PatternNFA.run(spark, ev.toDF("key", "tsMicros", "id", "kind"), Pattern(steps, within, am))
         .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
         .toSeq.sorted
 
@@ -402,9 +418,9 @@ class BatchOpsSpec extends AnyFunSuite {
     val gauge = spark.sparkContext.longAccumulator("nfaBufPeak")
     val preds = Seq("a" -> (col("kind") === lit("a")),
       "b" -> (col("kind") === lit("b")), "p" -> (col("kind") === lit("p")))
-    val out = PatternNFA.runPredicates(spark, df, Seq(
-        Step("A", "a"), Step("B", "b", OneOrMore()), Step("P", "p")),
-      preds, withinMicros = 60L * 1000000L, bufGauge = Some(gauge))
+    val out = PatternNFA.run(spark, df, PatternNFA.Pattern(Seq(
+        Step("A", "a"), Step("B", "b", OneOrMore()), Step("P", "p")), 60L * 1000000L,
+          preds = preds), bufGauge = Some(gauge))
       .collect()
     assert(out.length == n / 20, s"expected ${n / 20} matches, got ${out.length}")
     // single key → the accumulator holds exactly that key's peak
@@ -427,12 +443,10 @@ class BatchOpsSpec extends AnyFunSuite {
     ).toDF("key", "tsMicros", "id", "kind")
     val steps = Seq(Step("A", "a"), Step("N", "error", NotNext),
       Step("B", "b"), Step("P", "p"))
-    val matches = PatternNFA.run(spark, events, steps,
-      withinMicros = 100000000L, afterMatch = SkipToFirst("B"))
+    val matches = PatternNFA.run(spark, events, PatternNFA.Pattern(steps, 100000000L, SkipToFirst("B")))
       .select("anchor_id").as[Long].collect().toSeq
     assert(matches == Seq(0L))
-    val tmos = PatternNFA.runTimeouts(spark, events, steps,
-      withinMicros = 100000000L, afterMatch = SkipToFirst("B"))
+    val tmos = PatternNFA.run(spark, events, PatternNFA.Pattern(steps, 100000000L, SkipToFirst("B")), PatternNFA.Timeouts)
       .collect()
     assert(tmos.isEmpty,
       s"skipped anchors must not emit timeouts, got ${tmos.mkString(",")}")
@@ -697,8 +711,7 @@ class BatchOpsSpec extends AnyFunSuite {
     import graft.operators.PatternNFA._
     import spark.implicits._
     def run(ev: Seq[(Long, Long, Long, String)], steps: Seq[Step]) =
-      graft.operators.PatternNFA.run(spark,
-          ev.toDF("key", "tsMicros", "id", "kind"), steps, 1000L)
+      graft.operators.PatternNFA.run(spark, ev.toDF("key", "tsMicros", "id", "kind"), Pattern(steps, 1000L))
         .collect().map(r => (r.getAs[Long]("key"), r.getAs[String]("chain"),
           r.getAs[String]("counts"))).toSeq.sorted
     val g = Seq(Step("a", "A"),
@@ -730,8 +743,8 @@ class BatchOpsSpec extends AnyFunSuite {
     val ev1 = Seq((1L, 0L, 1L, "A")).toDF("key", "tsMicros", "id", "kind")
     // sub-steps must be plain One
     intercept[Exception] {
-      graft.operators.PatternNFA.run(spark, ev1, Seq(Step("a", "A"),
-        Step("G", "", GroupTimes(Seq(Step("b", "B", Optional)), 1, 2))), 1000L)
+      graft.operators.PatternNFA.run(spark, ev1, Pattern(Seq(Step("a", "A"),
+        Step("G", "", GroupTimes(Seq(Step("b", "B", Optional)), 1, 2))), 1000L))
     }
     // r14: group-FIRST patterns anchor on the head leaf (GroupITCase
     // testGroupBegin) — every first-repetition start anchors its run
@@ -772,7 +785,7 @@ class BatchOpsSpec extends AnyFunSuite {
       (1L, 50L, 7L, "P")).toDF("key", "tsMicros", "id", "kind")
     val steps = Seq(Step("A", "A"), Step("B", "B", OneOrMore()), Step("P", "P"))
     def chains(am: AfterMatch) =
-      graft.operators.PatternNFA.run(spark, ev, steps, 1000L, am)
+      graft.operators.PatternNFA.run(spark, ev, Pattern(steps, 1000L, am))
         .collect().map(_.getAs[String]("chain")).toSeq.sorted
     assert(chains(SkipToLast("B")) == Seq("1,2,5", "4,6,7"))
     assert(chains(SkipPastLastEvent) == Seq("1,2,5"))
@@ -788,8 +801,7 @@ class BatchOpsSpec extends AnyFunSuite {
     // AfterMatchSkipVectorsSpec pins both against the reference vectors
     val loop = intercept[Exception] {
       graft.operators.PatternNFA.run(spark, ev,
-        Seq(Step("A", "A"), Step("P", "P")), 1000L,
-        SkipToFirst("A", throwOnMiss = true)).collect()
+        Pattern(Seq(Step("A", "A"), Step("P", "P")), 1000L, SkipToFirst("A", throwOnMiss = true))).collect()
     }
     assert(messages(loop).exists(_.contains("re-anchor")), messages(loop))
     val missEv = Seq((1L, 0L, 1L, "A"), (1L, 10L, 2L, "P"))
@@ -797,13 +809,11 @@ class BatchOpsSpec extends AnyFunSuite {
     val missSteps = Seq(Step("A", "A"), Step("B", "B", Optional),
       Step("P", "P"))
     val miss = intercept[Exception] {
-      graft.operators.PatternNFA.run(spark, missEv, missSteps,
-        1000L, SkipToFirst("B", throwOnMiss = true)).collect()
+      graft.operators.PatternNFA.run(spark, missEv, Pattern(missSteps, 1000L, SkipToFirst("B", throwOnMiss = true))).collect()
     }
     assert(messages(miss).exists(_.contains("bound no rows")), messages(miss))
     // the CEP default: the miss prunes nothing, the match still emits
-    val silent = graft.operators.PatternNFA.run(spark, missEv, missSteps,
-        1000L, SkipToFirst("B"))
+    val silent = graft.operators.PatternNFA.run(spark, missEv, Pattern(missSteps, 1000L, SkipToFirst("B")))
       .collect().map(_.getAs[String]("chain")).toSeq
     assert(silent == Seq("1,2"), silent)
   }
@@ -901,8 +911,7 @@ class BatchOpsSpec extends AnyFunSuite {
     import graft.operators.PatternNFA._
     import spark.implicits._
     def run(ev: Seq[(Long, Long, Long, String)], steps: Seq[Step]) =
-      graft.operators.PatternNFA.run(spark,
-          ev.toDF("key", "tsMicros", "id", "kind"), steps, 1000L)
+      graft.operators.PatternNFA.run(spark, ev.toDF("key", "tsMicros", "id", "kind"), Pattern(steps, 1000L))
         .collect().map(r => (r.getAs[Long]("key"), r.getAs[String]("chain"),
           r.getAs[String]("counts"))).toSeq.sorted
     // B*: key 1 binds the loop (absorbing both Bs), key 2 skips it

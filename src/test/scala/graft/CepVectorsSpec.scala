@@ -58,7 +58,7 @@ class CepVectorsSpec extends AnyFunSuite {
 
   private def matches(df: DataFrame, steps: Seq[Step],
                       am: AfterMatch = NoSkip): Set[(String, String)] =
-    PatternNFA.run(spark, df, steps, W, am)
+    PatternNFA.run(spark, df, Pattern(steps, W, am))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
 
@@ -82,8 +82,7 @@ class CepVectorsSpec extends AnyFunSuite {
       (0L, 4L, 4L, "foobar"), (0L, 11L, 5L, "end"), (0L, 13L, 6L, "end"))
       .toDF("key", "tsMicros", "id", "kind")
     val got = PatternNFA.run(spark, df,
-        Seq(Step("S", "start"), Step("M", "middle"), Step("E", "end")),
-        withinMicros = 10L, NoSkip)
+        Pattern(Seq(Step("S", "start"), Step("M", "middle"), Step("E", "end")), 10L, NoSkip))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     assert(got == Set(("2,3,5", "")), got)
@@ -106,8 +105,7 @@ class CepVectorsSpec extends AnyFunSuite {
     // smallest window that excludes nothing at one ts) — a window of
     // 1µs has deadline ts+1 and ties at ts bind (ts < ts+1)
     val tiny = PatternNFA.run(spark, df,
-        Seq(Step("A", "a"), Step("B", "b"), Step("C", "c")),
-        withinMicros = 1L, NoSkip)
+        Pattern(Seq(Step("A", "a"), Step("B", "b"), Step("C", "c")), 1L, NoSkip))
       .collect().map(_.getAs[String]("chain")).toSet
     assert(tiny == Set("1,2,3"), tiny)
   }
@@ -230,8 +228,8 @@ class CepVectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.lit
     val df = ev(1 -> "x", 2 -> "x", 3 -> "x", 4 -> "x", 5 -> "x")
     val preds = Seq("S" -> lit(true), "E" -> lit(true))
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"), Step("E", "E")), preds, W, NoSkip)
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"), Step("E", "E")), W, NoSkip, preds = preds))
       .collect().map(_.getAs[String]("chain")).toSet
     assert(got == Set("1,2", "2,3", "3,4", "4,5"), got)
   }
@@ -240,8 +238,9 @@ class CepVectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.lit
     val df = ev(1 -> "x", 2 -> "x", 3 -> "x", 4 -> "x", 5 -> "x")
     val preds = Seq("S" -> lit(true), "E" -> lit(true))
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"), Step("E", "E", OneOrMore())), preds, W, NoSkip)
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"), Step("E", "E", OneOrMore())), W, NoSkip,
+          preds = preds))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     // the reference's ten substrings: anchors a..d, loop extents 1..4
@@ -332,11 +331,10 @@ class CepVectorsSpec extends AnyFunSuite {
     val steps = Seq(Step("S", "start"), Step("M", "middle", AnyOne),
       Step("E", "end", AnyOne))
     // the full-match side is unchanged: exactly one match
-    val full = PatternNFA.run(spark, df, steps, withinMicros = 10L, NoSkip)
+    val full = PatternNFA.run(spark, df, Pattern(steps, 10L, NoSkip))
       .collect().map(_.getAs[String]("chain")).toSet
     assert(full == Set("2,3,5"), full)
-    val tmo = PatternNFA.runTimeoutBranches(spark, df, steps,
-        withinMicros = 10L)
+    val tmo = PatternNFA.run(spark, df, Pattern(steps, 10L), BranchTimeouts)
       .collect().map(r => (r.getAs[Long]("anchor_id"),
         r.getAs[String]("chain"), r.getAs[Int]("n_bound"),
         r.getAs[Long]("timeout_us"))).toSet
@@ -487,10 +485,10 @@ class CepVectorsSpec extends AnyFunSuite {
     // equal the reference's list exactly.
     val df = evT((1, 1, "c"), (3, 2, "a"), (4, 3, "a"), (5, 4, "a"),
       (6, 5, "a"), (7, 6, "a"), (10, 7, "b"))
-    val rows = PatternNFA.run(spark, df, Seq(Step("S", "c"),
+    val rows = PatternNFA.run(spark, df, Pattern(Seq(Step("S", "c"),
         Step("M1", "a", LoopAny(1, Int.MaxValue)),
         Step("M2", "a", LoopAny(1, Int.MaxValue)),
-        Step("E", "b")), W, NoSkip)
+        Step("E", "b")), W, NoSkip))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
     assert(rows.length == rows.distinct.length, "splits must be counts-distinct")
     val gotMultiset = rows.groupBy(_._1).view.mapValues(_.length).toMap
@@ -517,7 +515,7 @@ class CepVectorsSpec extends AnyFunSuite {
       Step("M", "a", NextEntry(Times(2))), Step("E", "b"))
     assert(matches(dtimes, timesSteps) == Set(("1,2,3,5", "")))
     val dtimesCut = evT((1, 1, "c"), (2, 2, "a"), (3, 3, "a"), (4, 4, "a"))
-    val tmo1 = PatternNFA.runTimeouts(spark, dtimesCut, timesSteps, W8)
+    val tmo1 = PatternNFA.run(spark, dtimesCut, Pattern(timesSteps, W8), Timeouts)
       .collect().map(r => (r.getAs[Long]("anchor_id"),
         r.getAs[String]("chain"), r.getAs[Int]("n_bound"))).toSet
     assert(tmo1 == Set((1L, "1,2,3", 2)), tmo1)
@@ -526,8 +524,7 @@ class CepVectorsSpec extends AnyFunSuite {
     val optSteps = Seq(Step("S", "c"), Step("M", "a", Optional),
       Step("E", "b"))
     assert(matches(dopt, optSteps) == Set(("1,2,3", ""), ("1,3", "")))
-    val tmo2 = PatternNFA.runTimeouts(spark,
-        evT((1, 1, "c"), (5, 2, "a")), optSteps, W8)
+    val tmo2 = PatternNFA.run(spark, evT((1, 1, "c"), (5, 2, "a")), Pattern(optSteps, W8), Timeouts)
       .collect().map(r => (r.getAs[Long]("anchor_id"),
         r.getAs[String]("chain"), r.getAs[Int]("n_bound"))).toSet
     assert(tmo2 == Set((1L, "1,2", 2)), tmo2)
@@ -542,10 +539,9 @@ class CepVectorsSpec extends AnyFunSuite {
       Step("E", "b")))
     assert(got0 == Set(("1,4", "M:0"), ("1,2,4", "M:1"),
       ("1,2,3,4", "M:2")), got0)
-    val tmo3 = PatternNFA.runTimeouts(spark,
-        evT((1, 1, "c"), (3, 2, "a"), (4, 3, "a")),
-        Seq(Step("S", "c"), Step("M", "a", LoopAny(1, Int.MaxValue)),
-          Step("E", "b")), W8)
+    val tmo3 = PatternNFA.run(spark, evT((1, 1, "c"), (3, 2, "a"), (4, 3, "a")),
+        Pattern(Seq(Step("S", "c"), Step("M", "a", LoopAny(1, Int.MaxValue)),
+          Step("E", "b")), W8), Timeouts)
       .collect().map(r => (r.getAs[Long]("anchor_id"),
         r.getAs[String]("chain"), r.getAs[Int]("n_bound"))).toSet
     assert(tmo3 == Set((1L, "1,2,3", 2)), tmo3)
@@ -555,8 +551,8 @@ class CepVectorsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.lit
     val df = ev(1 -> "x", 2 -> "x", 3 -> "x", 4 -> "x", 5 -> "x")
     val preds = Seq("S" -> lit(true), "E" -> lit(true))
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"), Step("E", "E", AnyOne)), preds, W, NoSkip)
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"), Step("E", "E", AnyOne)), W, NoSkip, preds = preds))
       .collect().map(_.getAs[String]("chain")).toSet
     val want = (for (i <- 1 to 4; j <- (i + 1) to 5) yield s"$i,$j").toSet
     assert(got == want, got)
@@ -898,9 +894,9 @@ class CepVectorsSpec extends AnyFunSuite {
       val preds = Seq("S" -> (col("kind") === "c"),
         "M" -> (col("kind") === "a"), "U" -> (col("price") === 5.0),
         "E" -> (col("kind") === "d"))
-      PatternNFA.runPredicates(spark, df,
-          Seq(Step("S", "S"), Step("M", "M", Greedy(inner)),
-            Step("E", "E")), preds, W, NoSkip)
+      PatternNFA.run(spark, df,
+          Pattern(Seq(Step("S", "S"), Step("M", "M", Greedy(inner)),
+            Step("E", "E")), W, NoSkip, preds = preds))
         .collect().map(r => (r.getAs[String]("chain"),
           r.getAs[String]("counts"))).toSet
     }
@@ -1041,10 +1037,9 @@ class CepVectorsSpec extends AnyFunSuite {
       .toDF("key", "tsMicros", "id", "kind", "price")
     val preds = Seq("S" -> (col("kind") === "c"), "M" -> lit(true),
       "U" -> (col("price") === 5.0))
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"),
-          Step("M", "M", OneOrMore(untilKind = Some("U")))),
-        preds, W, NoSkip)
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"),
+          Step("M", "M", OneOrMore(untilKind = Some("U")))), W, NoSkip, preds = preds))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     assert(got == Set(("1,2", "M:1"), ("1,2", "M:2"), ("1,2", "M:3")),
@@ -1071,10 +1066,11 @@ class CepVectorsSpec extends AnyFunSuite {
     val stop = Seq(CtxCmp("=",
       NavExpr.VarAgg("SUM", Seq("M"), NavExpr.Cur(0)), NavExpr.Lit(6.0)))
     def got(q: Quant): Set[(String, String)] =
-      PatternNFA.runPredicates(spark, df,
-          Seq(Step("S", "S"), Step("M", "M", q)),
-          preds, W, NoSkip, navCols = Seq("price"),
-          untilCtx = Map("M" -> stop))
+      PatternNFA.run(spark, df,
+          Pattern(Seq(Step("S", "S"), Step("M", "M", q)), W, NoSkip,
+            preds = preds,
+            navCols = Seq("price"),
+            untilCtx = Map("M" -> stop)))
         .collect().map(r => (r.getAs[String]("chain"),
           r.getAs[String]("counts"))).toSet
     val one = got(OneOrMore())
@@ -1103,8 +1099,10 @@ class CepVectorsSpec extends AnyFunSuite {
   private def matchesCtx(df: DataFrame, steps: Seq[Step],
                          preds: Seq[(String, org.apache.spark.sql.Column)],
                          ctx: Map[String, Seq[CtxCmp]]): Set[(String, String)] =
-    PatternNFA.runPredicates(spark, df, steps, preds, W, NoSkip,
-        navCols = Seq("price"), ctx = ctx)
+    PatternNFA.run(spark, df, Pattern(steps, W, NoSkip,
+      preds = preds,
+      navCols = Seq("price"),
+      ctx = ctx))
       .collect().map(r => (r.getAs[String]("chain"),
         r.getAs[String]("counts"))).toSet
   private def kindIs(pairs: (String, String)*): Seq[(String, org.apache.spark.sql.Column)] = {
@@ -1240,7 +1238,7 @@ class CepVectorsSpec extends AnyFunSuite {
       Step("E", "p"))
     val W10 = 10L * 1000000L
     def tmo(df: org.apache.spark.sql.DataFrame) =
-      PatternNFA.runTimeoutBranches(spark, df, steps, W10)
+      PatternNFA.run(spark, df, Pattern(steps, W10), BranchTimeouts)
         .collect().map(r => (r.getAs[String]("chain"),
           r.getAs[Int]("n_bound"), r.getAs[Long]("timeout_us"))).toSet
     // scenario 1: prefixes [a,c2] and [a,c2,c3] COMPLETE on p@5 (their
@@ -1264,10 +1262,10 @@ class CepVectorsSpec extends AnyFunSuite {
     val zsteps = Seq(Step("S", "s"), Step("M", "c", ZeroOrMore()),
       Step("E", "p"))
     val s4 = evT((1, 1, "s"), (2, 2, "x"), (3, 3, "p"))
-    val full4 = PatternNFA.run(spark, s4, zsteps, W10, NoSkip)
+    val full4 = PatternNFA.run(spark, s4, Pattern(zsteps, W10, NoSkip))
       .collect().map(_.getAs[String]("chain")).toSet
     assert(full4 == Set("1,3"), full4)
-    val t4 = PatternNFA.runTimeoutBranches(spark, s4, zsteps, W10)
+    val t4 = PatternNFA.run(spark, s4, Pattern(zsteps, W10), BranchTimeouts)
       .collect().map(r => (r.getAs[String]("chain"),
         r.getAs[Int]("n_bound"))).toSet
     assert(t4 == Set(("1", 1)), t4)

@@ -1,7 +1,10 @@
 package graft
 
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit tests for the custom Catalyst expressions (reference gap
@@ -94,6 +97,111 @@ class FunctionsSpec extends AnyFunSuite {
         aggregate(transform(col("tk"), x => length(x)), lit(0),
           (acc, x) => acc + x).as("h"))
     assert(df.collect().forall(r => r.get(0) == r.get(1)))
+  }
+
+  /** Evaluate a binary vector kernel three ways over the same inputs:
+    * whole-stage codegen over an RDD-backed frame (no constant folding
+    * can pre-evaluate it), interpreted `eval` over literals, and the
+    * caller's plain-Scala fold. Every case must agree on all three. */
+  private def kernelParity(name: String, lType: DataType, rType: DataType,
+                           cases: Seq[(Any, Any)],
+                           mk: (Expression, Expression) => Expression)(
+                           ref: (Any, Any) => Option[Double]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val schema = StructType(Seq(StructField("i", IntegerType),
+      StructField("l", lType), StructField("r", rType)))
+    val rows = cases.zipWithIndex.map { case ((l, r), i) => Row(i, l, r) }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+        schema)
+      .select(col("i"), call_function(name, col("l"), col("r")).as("k"))
+    assert(df.queryExecution.executedPlan
+      .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined,
+      s"$name did not run under whole-stage codegen")
+    val codegen = df.collect().sortBy(_.getInt(0))
+      .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+    cases.zip(codegen).foreach { case ((l, r), cg) =>
+      val interp = Option(mk(Literal.create(l, lType), Literal.create(r, rType))
+        .eval(null)).map(_.asInstanceOf[Double])
+      val want = ref(l, r)
+      assert(cg == want && interp == want,
+        s"$name($l, $r): codegen $cg, interpreted $interp, fold $want")
+    }
+  }
+
+  /** Float elements widen to double exactly as the kernels read them. */
+  private def elems(v: Any): Option[Seq[Option[Double]]] = Option(v).map(
+    _.asInstanceOf[Seq[Any]].map {
+      case null => None
+      case f: Float => Some(f.toDouble)
+      case d: Double => Some(d)
+    })
+
+  test("quant_abs_err_sum kernel: codegen, interpreted and fold parity") {
+    // the HOF it replaced: aggregate(transform(v, x -> abs(x - floor(x *
+    // sc) / sc)), 0.0, +) — an empty array folds to 0.0 even under a NULL
+    // scale; a NULL element or scale on a non-empty array is NULL
+    def fold(v: Any, sc: Any): Option[Double] = elems(v).flatMap { xs =>
+      if (xs.isEmpty) Some(0.0)
+      else if (sc == null || xs.contains(None)) None
+      else {
+        val s = sc.asInstanceOf[Double]
+        Some(xs.flatten.foldLeft(0.0)((a, x) => a + math.abs(x - math.floor(x * s) / s)))
+      }
+    }
+    val cases: Seq[(Any, Any)] = Seq(
+      (Seq.empty[Double], null), (Seq.empty[Double], 127.0),
+      (Seq(0.1, -2.7, 3.14159), 127.0), (Seq(0.1, null, 3.0), 127.0),
+      (null, 127.0), (Seq(0.5, 1.25), null))
+    kernelParity("quant_abs_err_sum", ArrayType(DoubleType), DoubleType,
+      cases, (l, r) => graft.functions.QuantAbsErrSum(l, r))(fold)
+    val floats: Seq[(Any, Any)] = Seq(
+      (Seq.empty[Float], null), (Seq(0.1f, -2.7f, 3.14159f), 127.0),
+      (Seq(0.1f, null, 3.0f), 127.0), (null, 3.0))
+    kernelParity("quant_abs_err_sum", ArrayType(FloatType), DoubleType,
+      floats, (l, r) => graft.functions.QuantAbsErrSum(l, r))(fold)
+    // float input is read at float precision, not re-rounded to double
+    assert(fold(Seq(0.1f), 127.0) != fold(Seq(0.1), 127.0))
+  }
+
+  test("gauss_log_sum kernel: codegen, interpreted and fold parity") {
+    // Σ over (dim, mu, v) stats in array order of ln(2πv) + (x[dim] −
+    // mu)² / v; any NULL (array, stat, field, referenced element) or a
+    // dim outside the vector is NULL; no stats sum to 0.0
+    def fold(x: Any, st: Any): Option[Double] =
+      for {
+        xs <- elems(x)
+        stats <- Option(st).map(_.asInstanceOf[Seq[Row]])
+        terms <- stats.foldLeft(Option(0.0)) { (acc, s) =>
+          acc.flatMap { a =>
+            if (s == null || s.isNullAt(0) || s.isNullAt(1) || s.isNullAt(2)) None
+            else {
+              val (d, mu, v) = (s.getInt(0), s.getDouble(1), s.getDouble(2))
+              xs.lift(d).flatten.map(xv =>
+                a + math.log(2.0 * math.Pi * v) + (xv - mu) * (xv - mu) / v)
+            }
+          }
+        }
+      } yield terms
+    val stT = ArrayType(StructType(Seq(StructField("dim", IntegerType),
+      StructField("mu", DoubleType), StructField("v", DoubleType))))
+    val st = Seq(Row(0, 0.5, 2.0), Row(2, -1.0, 0.25))
+    val cases: Seq[(Any, Any)] = Seq(
+      (Seq.empty[Double], Seq.empty[Row]), (Seq.empty[Double], st),
+      (Seq(1.0, 9.0, -0.5), st), (Seq(1.0, 9.0, null), st),
+      (Seq(1.0, null, -0.5), st), (null, st), (Seq(1.0, 9.0, -0.5), null),
+      (Seq(1.0, 9.0, -0.5), Seq(Row(3, 0.0, 1.0))),
+      (Seq(1.0, 9.0, -0.5), Seq(Row(-1, 0.0, 1.0))),
+      (Seq(1.0, 9.0, -0.5), Seq(Row(0, null, 1.0))),
+      (Seq(1.0, 9.0, -0.5), Seq(Row(0, 0.0, 1.0), null)))
+    kernelParity("gauss_log_sum", ArrayType(DoubleType), stT, cases,
+      (l, r) => graft.functions.GaussLogSum(l, r))(fold)
+    val floats: Seq[(Any, Any)] = Seq(
+      (Seq.empty[Float], st), (Seq(1.1f, 9.0f, -0.3f), st),
+      (Seq(1.1f, 9.0f, null), st), (null, st),
+      (Seq(1.1f), Seq(Row(1, 0.0, 1.0))))
+    kernelParity("gauss_log_sum", ArrayType(FloatType), stT, floats,
+      (l, r) => graft.functions.GaussLogSum(l, r))(fold)
   }
 
   test("SQL registration") {

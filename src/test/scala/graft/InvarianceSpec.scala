@@ -50,11 +50,10 @@ class InvarianceSpec extends AnyFunSuite {
 
   test("PatternNFA match set is partition-invariant") {
     assertInvariant("PatternNFA") { ev =>
-      PatternNFA.run(spark, ev, Seq(
+      PatternNFA.run(spark, ev, PatternNFA.Pattern(Seq(
           PatternNFA.Step("signup", "signup"),
           PatternNFA.Step("click", "click", PatternNFA.Optional),
-          PatternNFA.Step("purchase", "purchase")),
-        withinMicros = 7200000000L)
+          PatternNFA.Step("purchase", "purchase")), 7200000000L))
     }(events)
   }
 

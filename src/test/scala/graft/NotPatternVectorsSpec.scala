@@ -44,7 +44,7 @@ class NotPatternVectorsSpec extends AnyFunSuite {
   }
 
   private def matches(df: DataFrame, steps: Seq[Step]): Set[(String, String)] =
-    PatternNFA.run(spark, df, steps, W, NoSkip)
+    PatternNFA.run(spark, df, Pattern(steps, W, NoSkip))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
 

@@ -41,7 +41,7 @@ class SameElementVectorsSpec extends AnyFunSuite {
   }
 
   private def matches(df: DataFrame, steps: Seq[Step]): Set[(String, String)] =
-    PatternNFA.run(spark, df, steps, W, NoSkip)
+    PatternNFA.run(spark, df, Pattern(steps, W, NoSkip))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
 
@@ -68,14 +68,13 @@ class SameElementVectorsSpec extends AnyFunSuite {
     // d sees three bound and the stop fires — extents 1..3
     import org.apache.spark.sql.functions.col
     val df = evT((1, "a"), (2, "d"), (2, "d"), (2, "d"), (4, "d"))
-    val got = PatternNFA.runPredicates(spark,
-        df.withColumn("v", org.apache.spark.sql.functions.lit(1.0)),
-        Seq(Step("A", "A"), Step("D", "D", OneOrMore())),
-        Seq("A" -> (col("kind") === "a"), "D" -> (col("kind") === "d")),
-        W, NoSkip, navCols = Seq("v"),
-        untilCtx = Map("D" -> Seq(CtxCmp("=",
+    val got = PatternNFA.run(spark, df.withColumn("v", org.apache.spark.sql.functions.lit(1.0)),
+        Pattern(Seq(Step("A", "A"), Step("D", "D", OneOrMore())), W, NoSkip,
+          preds = Seq("A" -> (col("kind") === "a"), "D" -> (col("kind") === "d")),
+          navCols = Seq("v"),
+          untilCtx = Map("D" -> Seq(CtxCmp("=",
           NavExpr.VarAgg("COUNT", Seq("D"), NavExpr.Cur(0)),
-          NavExpr.Lit(3.0)))))
+          NavExpr.Lit(3.0))))))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     assert(got == Set(("1,2", "D:1"), ("1,2", "D:2"), ("1,2", "D:3")),
@@ -117,17 +116,17 @@ class SameElementVectorsSpec extends AnyFunSuite {
       (0L, 3000000L, 3L, "a", 2.0), (0L, 3000000L, 4L, "a", 2.0),
       (0L, 7000000L, 5L, "b", 5.0))
       .toDF("key", "tsMicros", "id", "kind", "price")
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"),
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"),
           Step("M", "M", LoopAny(1, Int.MaxValue, zeroOk = true,
             entryAny = true)),
-          Step("E", "E")),
-        Seq("S" -> (col("kind") === "c"), "M" -> (col("kind") === "a"),
-          "E" -> lit(true)),
-        W, NoSkip, navCols = Seq("price"),
-        ctx = Map("E" -> Seq(CtxCmp("=",
+          Step("E", "E")), W, NoSkip,
+          preds = Seq("S" -> (col("kind") === "c"), "M" -> (col("kind") === "a"),
+            "E" -> lit(true)),
+          navCols = Seq("price"),
+          ctx = Map("E" -> Seq(CtxCmp("=",
           NavExpr.VarAgg("SUM", Seq("M"), NavExpr.Cur(0)),
-          NavExpr.Lit(4.0)))))
+          NavExpr.Lit(4.0))))))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     assert(got == Set(("1,2,3,4", "M:2"), ("1,2,4,5", "M:2"),
@@ -151,12 +150,11 @@ class SameElementVectorsSpec extends AnyFunSuite {
     // distinct step kinds are required by the ctx-free compile here;
     // the reused 'a' kind across M1 and E rides runPredicates
     import org.apache.spark.sql.functions.col
-    val got = PatternNFA.runPredicates(spark, df,
-        Seq(Step("S", "S"), Step("M1", "M1", ZeroOrMore()),
-          Step("M2", "M2", Optional), Step("E", "E")),
-        Seq("S" -> (col("kind") === "c"), "M1" -> (col("kind") === "a"),
-          "M2" -> (col("kind") === "b"), "E" -> (col("kind") === "a")),
-        W, NoSkip)
+    val got = PatternNFA.run(spark, df,
+        Pattern(Seq(Step("S", "S"), Step("M1", "M1", ZeroOrMore()),
+          Step("M2", "M2", Optional), Step("E", "E")), W, NoSkip,
+          preds = Seq("S" -> (col("kind") === "c"), "M1" -> (col("kind") === "a"),
+            "M2" -> (col("kind") === "b"), "E" -> (col("kind") === "a"))))
       .collect().map(r => (r.getAs[String]("chain"), r.getAs[String]("counts")))
       .toSet
     val want = Set(

@@ -12,6 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingOpsSpec extends AnyFunSuite {
   import StreamHarness.{spark, ev}
 
+  /** A followedBy B over kind-equality variables. */
+  private val cepSteps = Seq(graft.operators.PatternNFA.Step("A", "A"),
+    graft.operators.PatternNFA.Step("B", "B"))
+
   test("StreamingTopN keeps a bounded sorted buffer and re-emits on change") {
     val batches = Seq(
       Seq(ev(1, 10, 100, value = 5.0), ev(1, 11, 101, value = 9.0)),
@@ -106,18 +110,67 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(got == Map(10L -> 1L, 11L -> 2L, 12L -> 2L, 13L -> -1L))
   }
 
-  test("StreamingCEP emits earliest B per A within the window") {
+  test("streaming pattern door emits earliest B per A within the window") {
     val batches = Seq(
       Seq(ev(1, 100, 1, kind = "A"), ev(1, 110, 2, kind = "B"),
           ev(1, 120, 3, kind = "B"), ev(1, 500, 4, kind = "A")),
       Seq(ev(1, 9000, 9, kind = "A")))  // advances watermark
     val out = StreamHarness.run(batches, OutputMode.Append, "cep_spec") { ds =>
-      StreamingCEP(spark, ds, aKind = "A", bKind = "B",
+      StreamingMatchRecognize.pattern(spark, ds.toDF(), cepSteps,
         withinMicros = 60L * 1000000L, watermarkDelay = "1 second").toDF()
     }
-    val pairs = out.select("aId", "bId").collect()
+    val pairs = out.select("anchor_id", "end_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSeq
     assert(pairs == Seq(1L -> 2L)) // earliest B only; A@500 has no B in window
+  }
+
+  test("streaming pattern door emits a match when its anchor's window closes, not when B arrives") {
+    val input = StreamHarness.mkStream()
+    spark.catalog.dropTempView("cep_emit_spec")
+    val out = StreamingMatchRecognize.pattern(spark, input.toDS().toDF(),
+      cepSteps, withinMicros = 60L * 1000000L, watermarkDelay = "1 second")
+    val q = out.toDF().writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("cep_emit_spec").start()
+    def push(evs: graft.streaming.GEvent*): Unit = { input.addData(evs); q.processAllAvailable() }
+    def pairs = spark.table("cep_emit_spec").select("anchor_id", "end_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    try {
+      push(ev(1, 100, 1, kind = "A"), ev(1, 110, 2, kind = "B"))
+      push(ev(2, 150, 9, kind = "A")) // watermark 149: B final, A's window open to 160
+      assert(pairs.isEmpty, s"emitted before the anchor's window closed: $pairs")
+      push(ev(2, 200, 10, kind = "A")) // watermark 199 >= 100 + 60
+      assert(pairs == Set(1L -> 2L))
+    } finally q.stop()
+  }
+
+  test("streaming pattern door accepts until-kinds under Greedy and LoopAny like the batch door") {
+    import graft.operators.PatternNFA
+    import graft.operators.PatternNFA._
+    import spark.implicits._
+    // the stop kind x is named only as an until-kind: both doors must
+    // compile it onto its own variable
+    val evs = Seq(ev(1, 1, 1, "a"), ev(1, 2, 2, "b"), ev(1, 3, 3, "b"),
+      ev(1, 4, 4, "x"), ev(1, 5, 5, "b"), ev(1, 6, 6, "c"),
+      ev(1, 10, 7, "a"), ev(1, 11, 8, "b"), ev(1, 12, 9, "c"))
+    val within = 60L * 1000000L
+    def chains(df: org.apache.spark.sql.DataFrame) =
+      df.select("chain", "counts").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+    Seq(OneOrMore(Some("x")) -> SkipToNextRow,
+        Greedy(OneOrMore(Some("x"))) -> SkipToNextRow,
+        LoopAny(1, 3, untilKind = Some("x")) -> NoSkip).foreach { case (q, am) =>
+      val steps = Seq(Step("A", "a"), Step("B", "b", q), Step("C", "c"))
+      val batch = chains(PatternNFA.run(spark, evs.toDF(),
+        Pattern(steps, within, am)))
+      val streamed = chains(StreamHarness.run(
+          Seq(evs.take(5), evs.drop(5), Seq(ev(2, 100000, 99, "flush"))),
+          OutputMode.Append, "until_kind_spec") { ds =>
+        StreamingMatchRecognize.pattern(spark, ds.toDF(), steps, within, am,
+          watermarkDelay = "0 seconds").toDF()
+      })
+      assert(batch.nonEmpty, s"$q: no batch matches")
+      assert(streamed == batch, s"$q: streaming $streamed != batch $batch")
+    }
   }
 
   test("StreamingOverAgg carries the frame tail across batches") {
@@ -184,11 +237,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       s"state never shrank after eviction: $totals")
   }
 
-  test("StreamingCEP frees a key's state entry once its pattern window expires") {
+  test("streaming pattern door frees a key's state entry once its pattern window expires") {
     val input = StreamHarness.mkStream()
     spark.catalog.dropTempView("cep_gc_spec")
-    val out = StreamingCEP(spark, input.toDS(), aKind = "A", bKind = "B",
-      withinMicros = 60L * 1000000L, watermarkDelay = "1 second")
+    val out = StreamingMatchRecognize.pattern(spark, input.toDS().toDF(),
+      cepSteps, withinMicros = 60L * 1000000L, watermarkDelay = "1 second")
     val q = out.toDF().writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("cep_gc_spec").start()
     def push(evs: graft.streaming.GEvent*): Unit = { input.addData(evs); q.processAllAvailable() }
@@ -200,7 +253,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       push(ev(3, 6000, 12, kind = "A"))
     } finally q.stop()
     // the match still emitted...
-    val pairs = spark.table("cep_gc_spec").select("aId", "bId").collect()
+    val pairs = spark.table("cep_gc_spec").select("anchor_id", "end_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(pairs == Set(1L -> 2L))
     // ...and completed/expired keys release their entries: the state
@@ -671,13 +724,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       ev(4, 16, 7, "signup"), ev(1, 20, 2, "click"), ev(2, 22, 5, "click"),
       ev(4, 26, 8, "click"), ev(1, 30, 3, "purchase"),
       ev(4, 100, 9, "purchase"), ev(9, 300, 10, "flush"))
-    val expected = graft.operators.PatternNFA.runTimeouts(spark,
-        rows.toDF("key", "tsMicros", "id", "kind", "value")
+    val expected = graft.operators.PatternNFA.run(spark, rows.toDF("key", "tsMicros", "id", "kind", "value")
           .select(col("key"), col("tsMicros"), col("id"), col("kind")),
-        Seq(graft.operators.PatternNFA.Step("A", "signup"),
+        graft.operators.PatternNFA.Pattern(Seq(graft.operators.PatternNFA.Step("A", "signup"),
           graft.operators.PatternNFA.Step("B", "click"),
-          graft.operators.PatternNFA.Step("P", "purchase")),
-        withinMicros = 60000000L)
+          graft.operators.PatternNFA.Step("P", "purchase")), 60000000L), graft.operators.PatternNFA.Timeouts)
       .collect().map(_.toString).sorted.toSeq
     assert(expected.size == 3, expected) // keys 2, 3, 4 time out
     for ((batching, bi) <- Seq(Seq(rows), rows.map(Seq(_)),
@@ -1890,7 +1941,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val bdf = evs.map(e => (e.key, e.tsMicros, e.id, e.kind))
       .toDF("key", "tsMicros", "id", "kind")
-    val batch = PatternNFA.runTimeoutBranches(spark, bdf, steps, within)
+    val batch = PatternNFA.run(spark, bdf, PatternNFA.Pattern(steps, within), PatternNFA.BranchTimeouts)
       .collect().map(r => (r.getAs[Long]("key"), r.getAs[Long]("anchor_id"),
         r.getAs[Long]("last_id"), r.getAs[String]("chain"),
         r.getAs[Int]("n_bound"), r.getAs[Long]("timeout_us") / 1000000L))
